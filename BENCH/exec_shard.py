@@ -34,8 +34,8 @@ def main() -> None:
     from mediacrawler_spark.functions.urls import canonicalize_urls, host_of
     from mediacrawler_spark.operators.dedup import (
         BloomParams,
-        build_bloom_shards,
-        dedup_against_seen,
+        build_bloom_table,
+        dedup_against_seen_bloom,
         dedup_within_batch,
     )
     from mediacrawler_spark.session import get_spark
@@ -72,10 +72,9 @@ def main() -> None:
         )
         unique = dedup_within_batch(cand).persist()
         seen = synthetic_seen(spark, unique).persist()
-        shards = build_bloom_shards(
-            seen, BloomParams.size(max(1024, n // n_exec), 0.01, 16)
-        )
-        admitted = dedup_against_seen(unique, seen, spark, shards_bc=shards)
+        params = BloomParams.size(max(1024, n // n_exec), 0.01, 16)
+        table = build_bloom_table(seen, params)
+        admitted = dedup_against_seen_bloom(unique, seen, table, params)
         n_adm = admitted.count()
         n_in = cand.count()
         unique.unpersist()

@@ -57,7 +57,7 @@ def run(n_urls: int, spark=None, seen_filter: str = "bloom") -> dict:
     from mediacrawler_spark.bench_workloads import synthetic_seed_urls, synthetic_seen
     from mediacrawler_spark.functions.urls import canonicalize_urls, host_of
     from mediacrawler_spark.operators.dedup import (
-        BloomParams,
+        SEEN_FILTERS,
         build_bloom_table,
         dedup_against_seen_bloom,
         dedup_within_batch,
@@ -85,20 +85,9 @@ def run(n_urls: int, spark=None, seen_filter: str = "bloom") -> dict:
     )
     unique = dedup_within_batch(cand).persist()
     seen = synthetic_seen(spark, unique).persist()
-    if seen_filter == "cuckoo":
-        from mediacrawler_spark.operators.cuckoo import (
-            CuckooParams,
-            build_cuckoo_table,
-            dedup_against_seen_cuckoo,
-        )
-
-        cparams = CuckooParams.size(max(1024, n_urls), 32)
-        ctable = build_cuckoo_table(seen, cparams)
-        admitted = dedup_against_seen_cuckoo(unique, seen, ctable, cparams).persist()
-    else:
-        params = BloomParams.size(max(1024, n_urls), 0.01, 32)
-        table = build_bloom_table(seen, params)
-        admitted = dedup_against_seen_bloom(unique, seen, table, params).persist()
+    params = SEEN_FILTERS[seen_filter].size(max(1024, n_urls), 0.01, 32)
+    table = build_bloom_table(seen, params)
+    admitted = dedup_against_seen_bloom(unique, seen, table, params).persist()
     politeness = spark.createDataFrame(
         [("h0.example.test", BUDGET, 0)]
         + [(f"h{i}.example.test", BUDGET, 0) for i in range(1, N_HOSTS + 1)],

@@ -50,10 +50,6 @@ def bpe_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_SPLIT_PATTERN)).cast("bigint")
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are punctuation."""
     n = F.length(col)

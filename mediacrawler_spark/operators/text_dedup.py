@@ -261,10 +261,15 @@ def simhash(
     recombination is bit-identical (verified over the full corpus:
     0 mismatches in 50k signatures), measured 1.75x faster (the 64
     separate aggregate updates dominated the signature pass, guide
-    §1.2 step 2). Bound: a 16-bit lane counter saturates at 65,536
-    DISTINCT tokens in one doc — ~0.5 MB of unique words, far past any
-    real document (the packing/span operators chunk pathological docs
-    long before this)."""
+    §1.2 step 2). Bound: 32,767 DISTINCT tokens in one doc, worst case.
+    Lanes 0-2 count to 65,535, but the top lane (bits 48-63) is the
+    sign lane of the signed long sum: once 32,768 tokens set the same
+    top-lane bit the sum passes 2^63 − 1 and raises under ANSI (an
+    all-ones token hash pins both sides in tests/test_text_dedup.py;
+    random hashes set a bit half the time, so typical docs reach it near
+    65,536). ~0.25 MB of unique words is far past any real document
+    (the packing/span operators chunk pathological docs long before
+    this)."""
     hash_fn = token_hash or F.xxhash64
     if n_bits % 4:
         raise ValueError("n_bits must be divisible by 4 for lane packing")
@@ -539,25 +544,25 @@ def _with_gram_ids(freq: DataFrame) -> DataFrame:
     )
 
 
+_BROADCAST_SET_ROWS = 300_000
+
+
 def _attach_sets(
     cand: DataFrame, ish: DataFrame, set_col: str = "ish"
 ) -> DataFrame:
     """Attach the per-doc set column to BOTH sides of a candidate-pair
     frame (columns id_a, id_b → + <set_col>_a, <set_col>_b).
 
-    Join strategy is size-adaptive, not a local[32] constant: below
-    ``SPARK_GRAFT_BROADCAST_SET_ROWS`` docs (default 300k — ~150 MB of
-    int sets at 50 grams/doc) both attaches are broadcast hash joins, so
+    Join strategy is size-adaptive, not a local[32] constant: up to
+    ``_BROADCAST_SET_ROWS`` docs (300k — ~150 MB of int sets at 50
+    grams/doc) both attaches are broadcast hash joins, so
     the candidate stream reaches the verify with ZERO exchanges; beyond
     the cap they fall back to SHUFFLE_HASH — the candidate frame is
     shuffled by each id but never SORTED (sort-merge paid two 16M-row
     sorts here, measured 12.2s vs 8.2s broadcast at sf1.0)."""
-    import os
-
-    cap = int(os.environ.get("SPARK_GRAFT_BROADCAST_SET_ROWS", "300000"))
     ia = ish.select(F.col("id").alias("id_a"), F.col(set_col).alias(f"{set_col}_a"))
     ib = ish.select(F.col("id").alias("id_b"), F.col(set_col).alias(f"{set_col}_b"))
-    if ish.count() <= cap:  # ish is persisted by the caller
+    if ish.count() <= _BROADCAST_SET_ROWS:  # ish is persisted by the caller
         ia, ib = F.broadcast(ia), F.broadcast(ib)
     else:
         ia, ib = ia.hint("shuffle_hash"), ib.hint("shuffle_hash")

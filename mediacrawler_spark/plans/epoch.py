@@ -28,19 +28,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mediacrawler_spark.operators.cuckoo import (
-    CUCKOO_OVER_CAPACITY,
-    CuckooParams,
-    build_cuckoo_table,
-    dedup_against_seen_cuckoo,
-    insert_into_cuckoo,
-)
 from mediacrawler_spark.operators.dedup import (
-    BloomParams,
+    CUCKOO_OVER_CAPACITY,
+    SEEN_FILTERS,
     build_bloom_table,
     dedup_against_seen_bloom,
     dedup_within_batch,
-    or_merge_bloom,
+    filter_meta,
+    filter_params_from_meta,
+    filter_schema,
+    update_filter,
 )
 from mediacrawler_spark.operators.extract import (
     SPAN_ROWS_SCHEMA,
@@ -102,7 +99,7 @@ class EngineConfig:
     frontier_max_part_bytes: int = 256 << 20
     # URL-seen prefilter kind (north_rule "bloom/cuckoo"): bloom is the
     # smaller append-only default; cuckoo supports DELETE for TTL/eviction
-    # re-crawl scenarios (operators/cuckoo.py)
+    # re-crawl scenarios (kernels: operators/dedup.py, operators/cuckoo.py)
     seen_filter: str = "bloom"
     bloom_fpp: float = 0.01
     # FLOOR for the filter shard count; rebuilds raise it adaptively so
@@ -203,6 +200,8 @@ class CrawlEngine:
         )
 
     # -- persistent bloom state (incremental URL-seen prefilter) -------------
+    # ``bloom`` names the persisted filter of either kind; the dict carries
+    # the kernel params (operators/dedup.py), capacity, n_inserted, table.
     def _load_bloom(self) -> dict | None:
         """Resume the seen-prefilter from the snapshot (table + sizing
         meta). Returns None on a fresh catalog, one predating filter
@@ -210,20 +209,12 @@ class CrawlEngine:
         rebuilds from ``seen``."""
         m = self.catalog.meta().get("bloom")
         if m and self.catalog.has("bloom") and m.get("kind", "bloom") == self.cfg.seen_filter:
-            if m.get("kind", "bloom") == "cuckoo":
-                params = CuckooParams(
-                    n_shards=int(m["n_shards"]), n_buckets=int(m["n_buckets"])
-                )
-            else:
-                params = BloomParams(
-                    n_shards=int(m["n_shards"]), m_bits=int(m["m_bits"]), k=int(m["k"])
-                )
+            params = filter_params_from_meta(m)
             return {
-                "kind": m.get("kind", "bloom"),
                 "params": params,
                 "capacity": int(m["capacity"]),
                 "n_inserted": int(m["n_inserted"]),
-                "df": self._filter_df(self.catalog.read("bloom")),
+                "df": self._filter_df(self.catalog.read("bloom"), params),
             }
         return None
 
@@ -240,14 +231,25 @@ class CrawlEngine:
         probe — the same geometric discipline as _maybe_grow_frontier."""
         import math
 
-        if self.cfg.seen_filter == "cuckoo":
-            # 4 slots × 2 B per bucket at ~0.84 target load → ~2.4 B/key
-            bytes_per_key = 8.0 / (4 * 0.84)
-        else:
-            bytes_per_key = -math.log(self.cfg.bloom_fpp) / (math.log(2) ** 2) / 8.0
-        total = capacity * bytes_per_key
-        need = max(1.0, total / self.cfg.filter_shard_target_bytes)
+        bytes_per_key = SEEN_FILTERS[self.cfg.seen_filter].bytes_per_key(self.cfg.bloom_fpp)
+        need = max(1.0, capacity * bytes_per_key / self.cfg.filter_shard_target_bytes)
         return max(self.cfg.bloom_shards, 1 << math.ceil(math.log2(need)))
+
+    def _rebuild_bloom(self, keys: DataFrame, capacity: int, n_inserted: int) -> dict:
+        """Full filter build over ``keys`` sized for ``capacity``; stages
+        every shard."""
+        params = SEEN_FILTERS[self.cfg.seen_filter].size(
+            capacity, self.cfg.bloom_fpp, self._filter_shards_for(capacity)
+        )
+        self._stage_bloom(
+            build_bloom_table(keys, params), params.n_shards, list(range(params.n_shards))
+        )
+        return {
+            "params": params,
+            "capacity": capacity,
+            "n_inserted": n_inserted,
+            "df": self._filter_df(self.catalog.read_staged_parts("bloom"), params),
+        }
 
     def _ensure_bloom(self, bloom: dict | None, seen: DataFrame, n_batch: int) -> dict:
         """(Re)build the filter only when absent or about to exceed capacity.
@@ -257,12 +259,12 @@ class CrawlEngine:
         few epochs and silently degrade to a full anti-join). Capacity
         doubles on each rebuild, so total rebuild work over a whole crawl
         is O(|seen|) amortized; every other epoch pays only the O(delta)
-        OR-merge in :meth:`_advance_bloom`.
+        insert in :meth:`_advance_bloom`.
 
         The headroom check includes the INCOMING batch (ADVICE r02 medium:
         ``n_batch`` bounds this epoch's admitted delta — checking only
-        ``n_inserted`` let a cuckoo table overflow mid-insert and abort the
-        epoch; the bloom path merely degraded fpp for one epoch). The new
+        ``n_inserted`` let a slot-bounded filter overflow mid-insert and abort
+        the epoch; a bloom filter merely degraded fpp for one epoch). The new
         capacity ``2·max(n_seen, 4·n_batch)`` always covers
         ``n_seen + n_batch``.
         """
@@ -270,21 +272,7 @@ class CrawlEngine:
             return bloom
         n_seen = bloom["n_inserted"] if bloom is not None else seen.count()
         capacity = max(1024, 2 * max(n_seen, n_batch * 4))
-        n_shards = self._filter_shards_for(capacity)
-        if self.cfg.seen_filter == "cuckoo":
-            params = CuckooParams.size(capacity, n_shards)
-            table = build_cuckoo_table(seen.select("url_hash"), params)
-        else:
-            params = BloomParams.size(capacity, self.cfg.bloom_fpp, n_shards)
-            table = build_bloom_table(seen.select("url_hash"), params)
-        self._stage_bloom(table, params.n_shards, list(range(params.n_shards)))
-        return {
-            "kind": self.cfg.seen_filter,
-            "params": params,
-            "capacity": capacity,
-            "n_inserted": n_seen,
-            "df": self._filter_df(self.catalog.read_staged_parts("bloom")),
-        }
+        return self._rebuild_bloom(seen, capacity, n_seen)
 
     def _stage_bloom(self, table: DataFrame, n_shards: int, dirty: list[int]) -> None:
         """Stage filter shards as a partitioned replace table — a rebuild
@@ -295,13 +283,12 @@ class CrawlEngine:
             table.withColumn("_part", F.col("shard")), "bloom", n_shards, dirty
         )
 
-    def _filter_df(self, staged: DataFrame | None) -> DataFrame:
+    def _filter_df(self, staged: DataFrame | None, params) -> DataFrame:
         """Filter-table handle; empty shards have no row (an all-empty
         filter — fresh crawl — has no partitions at all)."""
         if staged is not None:
             return staged
-        payload = "state" if self.cfg.seen_filter == "cuckoo" else "bitmap"
-        return self.spark.createDataFrame([], f"shard int, {payload} binary")
+        return self.spark.createDataFrame([], filter_schema(params))
 
     def _advance_bloom(
         self,
@@ -312,21 +299,23 @@ class CrawlEngine:
         dirty_shards: list[int] | None = None,
     ) -> dict:
         """Fold the epoch's admitted delta into the persisted filter —
+        one cogroup insert of the dirty shards with the admitted keys:
         O(delta) work and an O(dirty shards) state write per epoch,
         independent of |seen| (VERDICT r01 item 3: never rebuild from the
         full seen set; VERDICT r02 item 1: never rewrite untouched
         shards). Zero-admission epochs (backoff/drain tail — common) skip
-        the build+merge+stage entirely.
+        the insert+stage entirely.
 
         ``dirty_shards`` = pmod(url_hash, n_shards) over the admitted keys
         (the caller usually knows it from the shared dirty-partition job);
         None computes it here.
 
-        Cuckoo inserts can fail probabilistically even under nominal
-        capacity (kick-chain exhaustion near the 0.84 load target); the
+        Kick-chain inserts can fail probabilistically even under nominal
+        capacity (exhaustion near the 0.84 load target); the
         proactive headroom check in :meth:`_ensure_bloom` makes this rare,
         but on overflow the epoch must not abort — rebuild at doubled
-        capacity from seen ∪ delta instead (ADVICE r02 medium)."""
+        capacity from seen ∪ delta instead (ADVICE r02 medium). A bloom
+        insert never overflows."""
         if n_admitted == 0:
             return bloom
         params = bloom["params"]
@@ -343,53 +332,29 @@ class CrawlEngine:
         old_dirty = bloom["df"].where(
             F.col("shard").isin([int(s) for s in dirty_shards])
         )
-        if bloom["kind"] == "cuckoo":
-            merged = insert_into_cuckoo(old_dirty, keys, params)
-            try:
-                self._stage_bloom(merged, params.n_shards, dirty_shards)
-            except Exception as e:  # Py4J wraps the executor RuntimeError
-                if CUCKOO_OVER_CAPACITY not in str(e):
-                    raise
-                capacity = 2 * max(
-                    bloom["capacity"], bloom["n_inserted"] + n_admitted
-                )
-                params = CuckooParams.size(capacity, self._filter_shards_for(capacity))
-                all_keys = seen.select("url_hash").unionByName(keys)
-                self._stage_bloom(
-                    build_cuckoo_table(all_keys, params),
-                    params.n_shards,
-                    list(range(params.n_shards)),
-                )
-                return {
-                    "kind": "cuckoo",
-                    "params": params,
-                    "capacity": capacity,
-                    "n_inserted": bloom["n_inserted"] + n_admitted,
-                    "df": self._filter_df(self.catalog.read_staged_parts("bloom")),
-                }
-        else:
-            delta = build_bloom_table(keys, params)
-            merged = or_merge_bloom(old_dirty, delta, params.m_bits // 8)
-            self._stage_bloom(merged, params.n_shards, dirty_shards)
+        n_inserted = bloom["n_inserted"] + n_admitted
+        try:
+            self._stage_bloom(
+                update_filter(old_dirty, keys, params), params.n_shards, dirty_shards
+            )
+        except Exception as e:  # Py4J wraps the executor RuntimeError
+            if CUCKOO_OVER_CAPACITY not in str(e):
+                raise
+            capacity = 2 * max(bloom["capacity"], n_inserted)
+            all_keys = seen.select("url_hash").unionByName(keys)
+            return self._rebuild_bloom(all_keys, capacity, n_inserted)
         return {
             **bloom,
-            "n_inserted": bloom["n_inserted"] + n_admitted,
-            "df": self._filter_df(self.catalog.read_staged_parts("bloom")),
+            "n_inserted": n_inserted,
+            "df": self._filter_df(self.catalog.read_staged_parts("bloom"), params),
         }
 
     def _bloom_meta(self, bloom: dict) -> dict:
-        p = bloom["params"]
-        meta = {
-            "kind": bloom["kind"],
-            "n_shards": p.n_shards,
+        return {
+            **filter_meta(bloom["params"]),
             "capacity": bloom["capacity"],
             "n_inserted": bloom["n_inserted"],
         }
-        if bloom["kind"] == "cuckoo":
-            meta["n_buckets"] = p.n_buckets
-        else:
-            meta.update({"m_bits": p.m_bits, "k": p.k})
-        return meta
 
     def documents(self) -> DataFrame:
         span_rows = self.catalog.read("span_rows")
@@ -520,10 +485,6 @@ class CrawlEngine:
                 # empty seen set (first epoch): everything is new — skip
                 # the filter collect/probe/anti-join jobs outright
                 deduped = unique_batch
-            elif bloom["kind"] == "cuckoo":
-                deduped = dedup_against_seen_cuckoo(
-                    unique_batch, seen, bloom["df"], bloom["params"]
-                )
             else:
                 deduped = dedup_against_seen_bloom(
                     unique_batch,

@@ -66,9 +66,25 @@ def pytest_unconfigure(config):
         shutil.rmtree(str(config.option.basetemp), ignore_errors=True)
 
 
+def _test_heap() -> str:
+    """Half the machine, at most the session's 24g default. The suite
+    shares one JVM; on a 16 GB host a 24g ParallelGC heap grows past
+    physical memory part-way through and the kernel OOM killer takes it,
+    failing every later Spark test."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(2, min(24, int(total_gb // 2)))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="mediacrawler_spark_tests", cpus=4, shuffle_partitions=4)
+    s = get_spark(
+        app_name="mediacrawler_spark_tests",
+        cpus=4,
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": _test_heap()},
+    )
     yield s
 
 

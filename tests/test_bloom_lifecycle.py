@@ -5,7 +5,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from mediacrawler_spark.operators.dedup import bloom_maybe_seen_udf, broadcast_bloom
+from mediacrawler_spark.operators.dedup import probe_filter
 from mediacrawler_spark.plans.epoch import CrawlEngine, EngineConfig
 from mediacrawler_spark.sinks.snapshot import SnapshotCatalog
 
@@ -14,6 +14,13 @@ def _keys(spark, lo, hi, stride=1):
     return spark.createDataFrame(
         [(h * 2_654_435_761 + 17,) for h in range(lo, hi, stride)], "url_hash long"
     ).withColumn("url", F.concat(F.lit("u"), F.col("url_hash")))
+
+
+def _maybe_seen(keys, bloom):
+    """``keys`` + boolean column ``m`` from the engine filter's probe."""
+    return probe_filter(keys, bloom["df"], bloom["params"]).withColumnRenamed(
+        "_maybe_seen", "m"
+    )
 
 
 def test_bloom_fill_rebuild_and_fpp_over_many_epochs(spark, tmp_path):
@@ -49,9 +56,8 @@ def test_bloom_fill_rebuild_and_fpp_over_many_epochs(spark, tmp_path):
     assert len(capacities) <= int(math.log2(total / 1024)) + 3, capacities
     assert capacities == sorted(capacities)
 
-    probe = bloom_maybe_seen_udf(broadcast_bloom(bloom["df"], bloom["params"]))
     # 3. zero false negatives over every inserted key
-    misses = seen.select(probe(F.col("url_hash")).alias("m")).filter("NOT m").count()
+    misses = _maybe_seen(seen, bloom).filter("NOT m").count()
     assert misses == 0
 
     # 1. fp rate on 5000 fresh keys: near fpp even though |seen| >> any batch
@@ -59,7 +65,7 @@ def test_bloom_fill_rebuild_and_fpp_over_many_epochs(spark, tmp_path):
         seen, on="url_hash", how="left_anti"
     )
     n_fresh = fresh.count()
-    fp = fresh.select(probe(F.col("url_hash")).alias("m")).filter("m").count()
+    fp = _maybe_seen(fresh, bloom).filter("m").count()
     assert fp / n_fresh < 0.05, f"bloom saturated: fp rate {fp}/{n_fresh}"
 
 
@@ -84,8 +90,7 @@ def test_bloom_state_survives_catalog_reopen(spark, tmp_path):
     assert re is not None
     assert re["n_inserted"] == 2000
     assert re["params"] == bloom["params"]
-    probe = bloom_maybe_seen_udf(broadcast_bloom(re["df"], re["params"]))
-    misses = batch.select(probe(F.col("url_hash")).alias("m")).filter("NOT m").count()
+    misses = _maybe_seen(batch, re).filter("NOT m").count()
     assert misses == 0
 
 
@@ -118,21 +123,15 @@ def test_cuckoo_overflow_recovers_by_rebuild(spark, tmp_path):
     accounting is defeated (capacity meta lies), a kick-chain overflow
     during the delta insert rebuilds at doubled capacity from seen ∪ delta
     instead of aborting the epoch."""
-    from mediacrawler_spark.operators.cuckoo import (
-        CuckooParams,
-        broadcast_cuckoo,
-        build_cuckoo_table,
-        cuckoo_maybe_seen_udf,
-    )
+    from mediacrawler_spark.operators.dedup import CuckooParams, build_bloom_table
 
     cfg = EngineConfig(seen_filter="cuckoo", bloom_shards=2)
     cat = SnapshotCatalog(spark, str(tmp_path / "snap_over"))
     eng = CrawlEngine(spark, cat, None, None, None, cfg)
     seen = _keys(spark, 0, 10)
     tiny = CuckooParams(n_shards=2, n_buckets=16)  # 128 slots total
-    eng._stage_bloom(build_cuckoo_table(seen.select("url_hash"), tiny), 2, [0, 1])
+    eng._stage_bloom(build_bloom_table(seen, tiny), 2, [0, 1])
     bloom = {
-        "kind": "cuckoo",
         "params": tiny,
         "capacity": 1_000_000,  # lie: forces the insert to hit overflow
         "n_inserted": 10,
@@ -143,9 +142,7 @@ def test_cuckoo_overflow_recovers_by_rebuild(spark, tmp_path):
     assert grown["n_inserted"] == 1510
     assert grown["params"].n_buckets > tiny.n_buckets
     # recovery preserves zero-false-negatives over ALL keys (old + delta)
-    probe = cuckoo_maybe_seen_udf(broadcast_cuckoo(grown["df"], grown["params"]))
-    every = seen.unionByName(batch)
-    misses = every.select(probe(F.col("url_hash")).alias("m")).filter("NOT m").count()
+    misses = _maybe_seen(seen.unionByName(batch), grown).filter("NOT m").count()
     assert misses == 0
 
 
@@ -181,10 +178,7 @@ def test_adaptive_shard_count_grows_with_capacity(spark, tmp_path):
     cat.commit(1, meta={"bloom": eng._bloom_meta(b2)})
 
     # zero false negatives through the probe on the grown layout
-    probe = bloom_maybe_seen_udf(broadcast_bloom(b2["df"], p))
-    misses = (
-        seen1.select(probe(F.col("url_hash")).alias("m")).filter("NOT m").count()
-    )
+    misses = _maybe_seen(seen1, b2).filter("NOT m").count()
     assert misses == 0
 
     # resume restores the grown shard count from meta

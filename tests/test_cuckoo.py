@@ -1,16 +1,13 @@
-"""Cuckoo seen-filter (north_rule bloom/cuckoo): delete+reinsert, fpp
-bound, exactness, and engine equivalence with the bloom path."""
+"""Cuckoo seen-filter kernel (north_rule bloom/cuckoo): delete+reinsert,
+fpp bound, overflow sentinel, and engine equivalence with the bloom
+kernel. Shared pipeline behaviour (exactness, probe paths, incremental
+insert) is covered for both kernels in tests/test_dedup.py."""
 
-from pyspark.sql import functions as F
-
-from mediacrawler_spark.operators.cuckoo import (
+from mediacrawler_spark.operators.dedup import (
     CuckooParams,
-    broadcast_cuckoo,
-    build_cuckoo_table,
-    cuckoo_maybe_seen_udf,
-    dedup_against_seen_cuckoo,
-    delete_from_cuckoo,
-    insert_into_cuckoo,
+    build_bloom_table,
+    probe_filter,
+    update_filter,
 )
 
 
@@ -18,16 +15,9 @@ def _keys(spark, hashes):
     return spark.createDataFrame([(h,) for h in hashes], "url_hash long")
 
 
-def _seen(spark, hashes):
-    return spark.createDataFrame(
-        [(h, f"u{h}") for h in hashes], "url_hash long, url string"
-    )
-
-
-def _probe(spark, table, params, hashes):
-    probe = cuckoo_maybe_seen_udf(broadcast_cuckoo(table, params))
-    df = _keys(spark, hashes).select("url_hash", probe(F.col("url_hash")).alias("m"))
-    return {r["url_hash"]: r["m"] for r in df.collect()}
+def _maybe_seen(spark, table, params, hashes):
+    probed = probe_filter(_keys(spark, hashes), table, params)
+    return {r["url_hash"]: r["_maybe_seen"] for r in probed.collect()}
 
 
 def test_no_false_negatives_and_fpp(spark):
@@ -35,10 +25,10 @@ def test_no_false_negatives_and_fpp(spark):
     absent = [h * 6_271 + 500_000_001 for h in range(4000)]
     absent = [a for a in absent if a not in set(present)]
     params = CuckooParams.size(4000, n_shards=8)
-    table = build_cuckoo_table(_keys(spark, present), params)
-    got = _probe(spark, table, params, present)
+    table = build_bloom_table(_keys(spark, present), params)
+    got = _maybe_seen(spark, table, params, present)
     assert all(got.values()), "cuckoo must never miss a present key"
-    fp = sum(_probe(spark, table, params, absent).values())
+    fp = sum(_maybe_seen(spark, table, params, absent).values())
     # 16-bit fingerprints, 2 buckets x 4 slots: fpp ~ 8/2^16 ~ 0.00012
     assert fp / len(absent) < 0.01, f"fpp too high: {fp}/{len(absent)}"
 
@@ -49,36 +39,19 @@ def test_delete_then_reinsert(spark):
     keys = [h * 7_919 + 11 for h in range(2000)]
     evict = keys[::10]
     params = CuckooParams.size(2000, n_shards=4)
-    table = build_cuckoo_table(_keys(spark, keys), params)
+    table = build_bloom_table(_keys(spark, keys), params)
 
-    after_del = delete_from_cuckoo(table, _keys(spark, evict), params)
-    got = _probe(spark, after_del, params, keys)
+    after_del = update_filter(table, _keys(spark, evict), params, op="delete")
+    got = _maybe_seen(spark, after_del, params, keys)
     kept = [k for k in keys if k not in set(evict)]
     assert all(got[k] for k in kept), "non-evicted keys must stay present"
     # evicted keys are gone modulo fingerprint collisions with survivors
     still = sum(got[k] for k in evict)
     assert still / len(evict) < 0.05, f"deletion ineffective: {still}/{len(evict)}"
 
-    back = insert_into_cuckoo(after_del, _keys(spark, evict), params)
-    got2 = _probe(spark, back, params, keys)
+    back = update_filter(after_del, _keys(spark, evict), params)
+    got2 = _maybe_seen(spark, back, params, keys)
     assert all(got2.values()), "reinserted keys must be present"
-
-
-def test_dedup_exactness_matches_plain_antijoin(spark):
-    seen_hashes = list(range(0, 3000, 3))
-    cand_hashes = list(range(0, 2000))
-    params = CuckooParams.size(len(seen_hashes), n_shards=8)
-    table = build_cuckoo_table(_keys(spark, seen_hashes), params)
-    cands = _seen(spark, cand_hashes).withColumnRenamed("url", "u").selectExpr(
-        "url_hash", "u AS url"
-    )
-    got = sorted(
-        r["url_hash"]
-        for r in dedup_against_seen_cuckoo(
-            cands, _seen(spark, seen_hashes), table, params
-        ).collect()
-    )
-    assert got == sorted(set(cand_hashes) - set(seen_hashes))
 
 
 def test_engine_equivalence_bloom_vs_cuckoo(spark, udfs, tmp_path):
@@ -116,15 +89,11 @@ def test_overflow_sentinel_token_links_both_sides():
     import pytest
 
     import mediacrawler_spark.plans.epoch as epoch_mod
-    from mediacrawler_spark.operators.cuckoo import (
-        _SLOTS,
-        CUCKOO_OVER_CAPACITY,
-        _insert_keys,
-    )
+    from mediacrawler_spark.operators.cuckoo import CUCKOO_OVER_CAPACITY
 
     assert epoch_mod.CUCKOO_OVER_CAPACITY is CUCKOO_OVER_CAPACITY
-    n_buckets = 4
-    state = np.zeros((n_buckets, _SLOTS), dtype=np.uint16)
+    params = CuckooParams(n_shards=1, n_buckets=4)
+    state = np.zeros(params.shape, dtype=params.dtype)
     with pytest.raises(RuntimeError, match=CUCKOO_OVER_CAPACITY):
         # far more keys than slots: the kick chain must exhaust
-        _insert_keys(state, np.arange(1, 200, dtype=np.int64), n_buckets)
+        params.insert(state, np.arange(1, 200, dtype=np.int64))

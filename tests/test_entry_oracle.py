@@ -91,3 +91,24 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["word", "n"]
+
+
+@pytest.mark.slow
+def test_page_of_props_matches_json_path(spark):
+    """Grammar probe for the regexp shortcut behind ``_page_of_props``: on
+    every sf0.1 ``events`` row it must equal the real JSON-path parse
+    ``get_json_object(props, '$.k')`` cast to long — NULLs included. A
+    generator change to the single-key ``{"k": N}`` props grammar fails
+    here instead of silently skewing the clickstream queries."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    events = spark.read.parquet(f"{sf01}/events.parquet")
+    probed = events.select(
+        entry_mod._page_of_props().alias("fast"),
+        F.get_json_object("props", "$.k").cast("long").alias("json"),
+    )
+    assert probed.count() > 0
+    assert probed.filter(~F.col("fast").eqNullSafe(F.col("json"))).count() == 0

@@ -276,3 +276,24 @@ def test_dedup_incremental_statuses(spark):
         11: ("near", 1),
         12: ("unique", -1),
     }
+
+
+def test_simhash_lane_packing_bound(spark):
+    """The lane-packed bit sums hold 32,767 distinct tokens per doc in the
+    worst case: with an all-ones token hash every token adds to every lane,
+    and the top lane is the sign lane of the signed long sum. 32,767
+    tokens give the exact all-ones signature; one more overflows, which
+    raises under the session's ANSI default instead of corrupting bits."""
+    from mediacrawler_spark.operators.text_dedup import simhash
+
+    def doc(n):
+        text = " ".join(f"t{i}" for i in range(n))
+        return spark.createDataFrame([("d", text)], "doc_id string, text string")
+
+    def all_ones(tok):
+        return F.lit(-1).cast("long")
+
+    got = simhash(doc(32_767), token_hash=all_ones).collect()
+    assert [r["simhash"] for r in got] == [-1]
+    with pytest.raises(Exception, match="(?i)overflow"):
+        simhash(doc(32_768), token_hash=all_ones).collect()
