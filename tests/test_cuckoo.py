@@ -1,11 +1,12 @@
 """Cuckoo seen-filter kernel (north_rule bloom/cuckoo): delete+reinsert,
-fpp bound, overflow sentinel, and engine equivalence with the bloom
-kernel. Shared pipeline behaviour (exactness, probe paths, incremental
+fpp bound, exact dedup, overflow sentinel, and engine equivalence with
+the bloom kernel. Shared pipeline behaviour (probe paths, incremental
 insert) is covered for both kernels in tests/test_dedup.py."""
 
 from mediacrawler_spark.operators.dedup import (
     CuckooParams,
     build_bloom_table,
+    dedup_against_seen_bloom,
     probe_filter,
     update_filter,
 )
@@ -13,6 +14,12 @@ from mediacrawler_spark.operators.dedup import (
 
 def _keys(spark, hashes):
     return spark.createDataFrame([(h,) for h in hashes], "url_hash long")
+
+
+def _seen(spark, hashes):
+    return spark.createDataFrame(
+        [(h, f"u{h}") for h in hashes], "url_hash long, url string"
+    )
 
 
 def _maybe_seen(spark, table, params, hashes):
@@ -52,6 +59,21 @@ def test_delete_then_reinsert(spark):
     back = update_filter(after_del, _keys(spark, evict), params)
     got2 = _maybe_seen(spark, back, params, keys)
     assert all(got2.values()), "reinserted keys must be present"
+
+
+def test_dedup_exactness_matches_plain_antijoin(spark):
+    seen_hashes = list(range(0, 3000, 3))
+    cand_hashes = list(range(0, 2000))
+    params = CuckooParams.size(len(seen_hashes), n_shards=8)
+    seen = _seen(spark, seen_hashes)
+    table = build_bloom_table(seen, params)
+    got = sorted(
+        r["url_hash"]
+        for r in dedup_against_seen_bloom(
+            _seen(spark, cand_hashes), seen, table, params
+        ).collect()
+    )
+    assert got == sorted(set(cand_hashes) - set(seen_hashes))
 
 
 def test_engine_equivalence_bloom_vs_cuckoo(spark, udfs, tmp_path):
