@@ -215,7 +215,8 @@ def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     ~1.3–1.6× faster on the 2M-URL admission bench with identical output
     checksums. Cost: the source is scanned twice (filter + complement) —
     callers feed it materialized reads (the engine's per-epoch candidates
-    parquet, the bench generator), never an expensive lazy chain. Batch
+    parquet, the seed table, the bench generator), never an expensive
+    lazy chain. Batch
     only — streaming keeps the Column hybrid (one pass, no union).
     Byte-parity with the Column path is pinned in tests/test_urls.py."""
     from mediacrawler_spark.functions.exprcache import cached_exprs

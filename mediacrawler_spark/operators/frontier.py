@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mediacrawler_spark.functions.urls import canonicalize_urls, host_of, infer_kind
+from mediacrawler_spark.functions.urls import host_of, infer_kind, with_canonical_url
 from mediacrawler_spark.schemas import FRONTIER_SCHEMA
 from mediacrawler_spark.sources.fetch import BLOCKING, PERMANENT, RETRYABLE
 
@@ -36,8 +36,13 @@ def seeds_to_candidates(seeds: DataFrame, epoch: int = 0) -> DataFrame:
 
     A seed of bare URLs is the common real input (the reference's
     specified-URL mode): rows with a NULL/empty ``kind`` get it inferred
-    from URL shape (zhihu/help.py:441-460 judge_zhihu_url analog)."""
-    s = seeds.withColumn("url", canonicalize_urls(F.col("url")))
+    from URL shape (zhihu/help.py:441-460 judge_zhihu_url analog).
+
+    ``url``, ``url_hash`` and ``host`` are final: the epoch loop admits
+    this batch without canonicalizing it again. The split canonicalizer
+    keeps JVM-eligible rows in codegen (the Column hybrid would put an
+    Arrow UDF pass over every seed)."""
+    s = with_canonical_url(seeds)
     kind = F.coalesce(
         F.nullif(F.col("kind"), F.lit("")), infer_kind(F.col("url"))
     )

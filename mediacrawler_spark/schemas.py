@@ -11,6 +11,8 @@ input_hint): interleaved text + media spans, ordered by ``offset``.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- documents: the primary output table (driver-fixed) -------------------
@@ -160,3 +162,17 @@ SEEDS_SCHEMA = T.StructType(
         T.StructField("seq", T.LongType(), False),
     ]
 )
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """Zero-row frame of ``schema`` (a StructType or DDL string) that the
+    optimizer can see through: typed nulls over ``spark.range(1)`` behind
+    ``where(false)``, which PruneFilters folds into an empty
+    ``LocalRelation``. ``createDataFrame([], schema)`` is an RDD-backed
+    ``LogicalRDD`` instead: nothing prunes it, and every action over it
+    (a count, a union it feeds) schedules jobs."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    ).where(F.lit(False))

@@ -27,6 +27,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def parquet_rows(path: str) -> int:
@@ -151,9 +152,12 @@ class SnapshotCatalog:
         """Write the next full version of ``table`` (not yet visible).
         For replace-style tables (frontier churn, quarantine). Staging the
         same table twice before a commit writes a second version — never
-        overwrites the first (a lazy plan may still be reading it)."""
+        overwrites the first (a lazy plan may still be reading it). The
+        version records its schema like :meth:`stage_append`."""
         v = max(self._versions.get(table, -1), self._pending.get(table, -1)) + 1
-        df.write.mode("overwrite").parquet(self._path(table, v))
+        path = self._path(table, v)
+        df.write.mode("overwrite").parquet(path)
+        self._write_dir_schema(path, df.schema)
         self._pending[table] = v
 
     def stage_append(self, df: DataFrame, table: str, epoch: int) -> None:
@@ -164,52 +168,63 @@ class SnapshotCatalog:
         The increment's schema is recorded beside the data as
         ``_schema.json`` (underscore-prefixed: invisible to Spark and
         pyarrow dataset discovery, like ``_SUCCESS``) — the Iceberg
-        schema-id analog that lets :meth:`_read_append_dirs` support
-        add/drop-column schema evolution across epochs without the
-        footer-scan cost of ``mergeSchema``."""
+        schema-id analog that lets :meth:`_read_dirs` read without a
+        schema-inference job and support add/drop-column schema evolution
+        across epochs without the footer-scan cost of ``mergeSchema``."""
         path = os.path.join(self.root, table, f"e={epoch}")
         df.write.mode("overwrite").parquet(path)
-        self._write_dir_schema(path, df)
+        self._write_dir_schema(path, df.schema)
         self._pending_appends.setdefault(table, []).append(str(epoch))
 
     @staticmethod
-    def _write_dir_schema(path: str, df: DataFrame) -> None:
+    def _write_dir_schema(path: str, schema: T.StructType) -> None:
         with open(os.path.join(path, "_schema.json"), "w") as f:
-            json.dump(df.schema.jsonValue(), f, sort_keys=True)
+            json.dump(schema.jsonValue(), f, sort_keys=True)
 
-    def _read_append_dirs(self, paths: list[str]) -> DataFrame:
-        """Read data dirs with add/drop-column schema evolution (the
-        Iceberg schema-evolution read analog for append tables).
+    @staticmethod
+    def _dir_schema(path: str) -> str | None:
+        """Recorded ``_schema.json`` text of a data dir, or None for a
+        legacy dir written without one. A ptable leaf (``_part=<k>``)
+        shares the schema its version dir records."""
+        if os.path.basename(path).startswith("_part="):
+            path = os.path.dirname(path)
+        try:
+            with open(os.path.join(path, "_schema.json")) as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
 
-        Each dir's ``_schema.json`` (written at stage time — a local
-        metadata read, never a parquet footer scan) is compared; when all
-        retained increments agree (the overwhelmingly common case, and
-        always true for single-dir reads, version dirs, and ptable
-        leaves, which carry no schema file) this is exactly a plain
-        multi-dir parquet read. When increments disagree — a column was
-        added or dropped mid-crawl — each dir is read under its own
-        schema and aligned by name (``unionByName`` with missing columns
-        as nulls), so old rows read NULL for later-added columns, like
-        Iceberg. Renames and type changes are NOT supported: a same-name
-        type conflict fails the union loudly rather than guessing.
-        Legacy dirs without a schema file keep the historical plain-read
-        behavior."""
-        schemas = set()
-        for p in paths:
-            try:
-                with open(os.path.join(p, "_schema.json")) as f:
-                    schemas.add(f.read())
-            except FileNotFoundError:
-                pass
-        if len(schemas) <= 1:
-            return self.spark.read.parquet(*paths)
-        out = None
-        for p in paths:
-            part = self.spark.read.parquet(p)
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
-        return out
+    def _read_dirs(self, paths: list[str]) -> DataFrame:
+        """Read catalog data dirs, with add/drop-column schema evolution
+        (the Iceberg schema-evolution read analog).
+
+        Every dir the catalog writes records its schema as
+        ``_schema.json`` (a local metadata read, never a parquet footer
+        scan). When all dirs agree — the overwhelmingly common case, and
+        always true for a single dir — the read is one plain multi-dir
+        parquet scan under that schema: no schema-inference job (Spark
+        makes a user schema nullable on read, so the result equals the
+        inferred one). When dirs disagree — a column was added or
+        dropped mid-crawl — each dir is read under its own schema and
+        aligned by name (``unionByName`` with missing columns as nulls),
+        so old rows read NULL for later-added columns, like Iceberg.
+        Renames and type changes are NOT supported: a same-name type
+        conflict fails the union loudly rather than guessing. Legacy
+        dirs without a schema file keep the historical inferred read."""
+        found = [self._dir_schema(p) for p in paths]
+        recorded = set(found) - {None}
+        if len(recorded) > 1:
+            out = None
+            for p in paths:
+                part = self._read_dirs([p])
+                out = part if out is None else out.unionByName(
+                    part, allowMissingColumns=True
+                )
+            return out
+        if recorded and None not in found:
+            schema = T.StructType.fromJson(json.loads(recorded.pop()))
+            return self.spark.read.schema(schema).parquet(*paths)
+        return self.spark.read.parquet(*paths)
 
     # -- hash-partitioned replace tables (delta commits) ---------------------
     # A replace table that is large and sparsely mutated per epoch (the
@@ -240,7 +255,8 @@ class SnapshotCatalog:
         FULL new content of exactly the dirty partitions (rows of clean
         partitions are the caller's responsibility to exclude — they keep
         their committed pins). A dirty partition absent from ``df``
-        (drained empty) drops out of the pin map."""
+        (drained empty) drops out of the pin map. The version dir records
+        the schema its leaves share (``part_col`` dropped)."""
         dirty_set = {int(k) for k in dirty}
         full_rewrite = dirty_set == set(range(n_parts))
         base = self._pending_parts.get(table) or self._ptables.get(table)
@@ -253,6 +269,10 @@ class SnapshotCatalog:
         v = self._next_version(table)
         path = self._path(table, v)
         df.write.mode("overwrite").partitionBy(part_col).parquet(path)
+        # leaves hold the data columns only (part_col is a directory key)
+        self._write_dir_schema(
+            path, T.StructType([f for f in df.schema.fields if f.name != part_col])
+        )
         written = {
             int(e.split("=", 1)[1])
             for e in os.listdir(path)
@@ -298,7 +318,7 @@ class SnapshotCatalog:
         ent = self._pending_parts.get(table) or self._ptables.get(table)
         if not ent or not ent["parts"]:
             return None
-        return self.spark.read.parquet(*self._ptable_paths(ent, table))
+        return self._read_dirs(self._ptable_paths(ent, table))
 
     def read_parts(self, table: str, parts: list[int]) -> DataFrame | None:
         """Read ONLY the given partitions of the committed partitioned
@@ -313,9 +333,7 @@ class SnapshotCatalog:
         sub = {k: v for k, v in ent["parts"].items() if k in want}
         if not sub:
             return None
-        return self.spark.read.parquet(
-            *self._ptable_paths({"n": ent["n"], "parts": sub}, table)
-        )
+        return self._read_dirs(self._ptable_paths({"n": ent["n"], "parts": sub}, table))
 
     def legacy_version(self, table: str) -> int | None:
         """Version pin of a FULL replace table for a name that is NOT a
@@ -422,10 +440,6 @@ class SnapshotCatalog:
         """Snapshot properties of the last commit (empty dict if none)."""
         return dict(self._meta)
 
-    def read_staged_version(self, table: str) -> DataFrame:
-        """Read the staged (pending) full version of a replace table."""
-        return self.spark.read.parquet(self._path(table, self._pending[table]))
-
     def staged_rows(self, table: str) -> int:
         """Row count of a staged replace-table version — parquet footers
         only, zero Spark jobs."""
@@ -440,21 +454,20 @@ class SnapshotCatalog:
         """Read one staged (not yet committed) epoch increment back — used
         to materialize a stage mid-epoch so downstream consumers don't
         recompute its plan."""
-        return self.spark.read.parquet(os.path.join(self.root, table, f"e={epoch}"))
+        return self._read_dirs([os.path.join(self.root, table, f"e={epoch}")])
 
     def read(self, table: str) -> DataFrame | None:
         ent = self._ptables.get(table)
         if ent is not None:
             if not ent["parts"]:
                 return None
-            return self.spark.read.parquet(*self._ptable_paths(ent, table))
+            return self._read_dirs(self._ptable_paths(ent, table))
         if table in self._versions:
-            return self.spark.read.parquet(self._path(table, self._versions[table]))
+            return self._read_dirs([self._path(table, self._versions[table])])
         epochs = self._appends.get(table)
         if not epochs:
             return None
-        paths = [os.path.join(self.root, table, f"e={e}") for e in epochs]
-        return self._read_append_dirs(paths)
+        return self._read_dirs([os.path.join(self.root, table, f"e={e}") for e in epochs])
 
     def commit_history(self) -> list[dict]:
         """Every commit record still retained in the log, oldest first —
@@ -499,7 +512,7 @@ class SnapshotCatalog:
                 f"time travel to epoch {epoch} unavailable for {table!r}: "
                 f"{len(missing)} pinned dir(s) expired (first: {missing[0]})"
             )
-        return self._read_append_dirs(paths)
+        return self._read_dirs(paths)
 
     def _pin_paths(self, table: str, pins: tuple[str, object]) -> list[str]:
         kind, pin = pins
@@ -850,14 +863,14 @@ class SnapshotCatalog:
         n = 0
         while (label := f"c{epoch}_{n}") in existing:
             n += 1
-        df = self._read_append_dirs(
+        df = self._read_dirs(
             [os.path.join(self.root, table, f"e={lab}") for lab in labels]
         )
         out = os.path.join(self.root, table, f"e={label}")
         df.write.mode("overwrite").parquet(out)
         # the merged dir carries the union schema of its inputs, so
         # schema evolution survives compaction
-        self._write_dir_schema(out, df)
+        self._write_dir_schema(out, df.schema)
         return label
 
     def _append_dir_bytes(self, table: str, label: str) -> int:
@@ -1003,7 +1016,7 @@ class SnapshotCatalog:
         new_labels: list[str] = []
         for lab in labels:
             path = os.path.join(self.root, table, f"e={lab}")
-            df = self._read_append_dirs([path])
+            df = self._read_dirs([path])
             n_match = df.filter(cond).count()
             if n_match == 0:
                 new_labels.append(lab)
@@ -1019,7 +1032,7 @@ class SnapshotCatalog:
             if kept_count == 0:
                 continue  # fully-deleted increment: label simply vanishes
             kept.write.mode("overwrite").parquet(out)
-            self._write_dir_schema(out, kept)
+            self._write_dir_schema(out, kept.schema)
             new_labels.append(newlab)
         if deleted == 0:
             return 0  # nothing matched: no rewrite happened, no commit needed

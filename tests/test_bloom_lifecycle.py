@@ -3,6 +3,7 @@ O(delta) per-epoch maintenance, geometric rebuilds, resume from snapshot."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from mediacrawler_spark.operators.dedup import probe_filter
@@ -43,10 +44,9 @@ def test_bloom_fill_rebuild_and_fpp_over_many_epochs(spark, tmp_path):
     capacities = []
     for e in range(n_epochs):
         batch = _keys(spark, e * per_epoch, (e + 1) * per_epoch)
-        bloom = eng._ensure_bloom(bloom, seen, per_epoch)
+        bloom = eng._update_bloom(bloom, seen, batch, per_epoch, per_epoch)
         if not capacities or capacities[-1] != bloom["capacity"]:
             capacities.append(bloom["capacity"])
-        bloom = eng._advance_bloom(bloom, batch, per_epoch, seen)
         seen = seen.unionByName(batch)
 
     total = n_epochs * per_epoch
@@ -77,10 +77,8 @@ def test_bloom_state_survives_catalog_reopen(spark, tmp_path):
     cat = SnapshotCatalog(spark, root)
     eng = CrawlEngine(spark, cat, None, None, None, cfg)
 
-    seen0 = _keys(spark, 0, 0)
     batch = _keys(spark, 0, 2000)
-    bloom = eng._ensure_bloom(None, seen0, 2000)
-    bloom = eng._advance_bloom(bloom, batch, 2000, seen0)
+    bloom = eng._update_bloom(None, None, batch, 2000, 2000)
     cat.commit(0, meta={"bloom": eng._bloom_meta(bloom)})
 
     eng2 = CrawlEngine(
@@ -104,18 +102,20 @@ def test_ensure_bloom_accounts_for_incoming_batch(spark, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path / "snap_headroom"))
     eng = CrawlEngine(spark, cat, None, None, None, cfg)
     seen = _keys(spark, 0, 900)
-    bloom = eng._ensure_bloom(None, seen, 900)
+    none = _keys(spark, 0, 0)
+    bloom = eng._update_bloom(None, seen, none, 900, 0)
     cap0 = bloom["capacity"]
     assert bloom["n_inserted"] == 900
 
     # batch exactly one over the remaining headroom → proactive rebuild
+    # (here every batch row is a duplicate: nothing is admitted)
     n_batch = cap0 - 900 + 1
-    grown = eng._ensure_bloom(bloom, seen, n_batch)
+    grown = eng._update_bloom(bloom, seen, none, n_batch, 0)
     assert grown["capacity"] > cap0
     assert grown["capacity"] >= 900 + n_batch
 
     # batch that fits → untouched (no rebuild churn)
-    assert eng._ensure_bloom(grown, seen, 1) is grown
+    assert eng._update_bloom(grown, seen, none, 1, 0) is grown
 
 
 def test_cuckoo_overflow_recovers_by_rebuild(spark, tmp_path):
@@ -162,13 +162,13 @@ def test_adaptive_shard_count_grows_with_capacity(spark, tmp_path):
 
     # small first build: floor applies
     seen0 = _keys(spark, 0, 200)
-    b = eng._ensure_bloom(None, seen0, 200)
+    b = eng._update_bloom(None, None, seen0, 200, 200)
     assert b["params"].n_shards == 2
     cat.commit(0, meta={"bloom": eng._bloom_meta(b)})
 
     # big rebuild: capacity ~2x40k keys -> ~12 KB of bitmap -> >2 shards
-    seen1 = _keys(spark, 0, 40_000)
-    b2 = eng._ensure_bloom({**b, "n_inserted": 40_000}, seen1, 40_000)
+    seen1, none = _keys(spark, 0, 40_000), _keys(spark, 0, 0)
+    b2 = eng._update_bloom({**b, "n_inserted": 40_000}, seen1, none, 40_000, 0)
     p = b2["params"]
     assert p.n_shards > 2, p
     assert p.n_shards & (p.n_shards - 1) == 0  # power of two
@@ -194,7 +194,116 @@ def test_adaptive_shard_count_grows_with_capacity(spark, tmp_path):
         spark, SnapshotCatalog(spark, str(tmp_path / "snap_adaptive_c")),
         None, None, None, cfgc,
     )
-    bc = engc._ensure_bloom(None, _keys(spark, 0, 40_000), 40_000)
+    bc = engc._update_bloom(None, _keys(spark, 0, 40_000), none, 40_000, 0)
     pc = bc["params"]
     assert pc.n_shards > 2, pc
     assert 8 * pc.n_buckets <= 4 * 2048, pc  # per-shard state bound (x4 slack: pow2 bucket rounding)
+
+
+class _SpyCatalog(SnapshotCatalog):
+    """Counts ``stage_parts("bloom")`` calls per committed epoch."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.bloom_stages: dict[int, int] = {}
+        self._staged = 0
+
+    def stage_parts(self, df, table, *args, **kw):
+        self._staged += table == "bloom"
+        super().stage_parts(df, table, *args, **kw)
+
+    def commit(self, epoch, meta=None):
+        super().commit(epoch, meta)
+        self.bloom_stages[epoch] = self.bloom_stages.get(epoch, 0) + self._staged
+        self._staged = 0
+
+
+class _TightEngine(CrawlEngine):
+    """Reports every rebuilt filter as full, so each later epoch with a
+    non-empty batch is a capacity rebuild (the sizing itself is real)."""
+
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self.rebuilds: list[int] = []  # n_inserted of each rebuild
+
+    def _rebuild_bloom(self, keys, capacity, n_inserted):
+        self.rebuilds.append(n_inserted)
+        return {**super()._rebuild_bloom(keys, capacity, n_inserted), "capacity": n_inserted}
+
+
+def _crawl_state(eng):
+    cat = eng.catalog
+    order: dict = {}
+    for r in eng.fetch_log().orderBy("host", "epoch", "host_rank").collect():
+        order.setdefault(r["host"], []).append((r["url"], r["epoch"], r["kind"]))
+    docs = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in eng.documents().collect()
+    }
+    return {r["url"] for r in cat.read("seen").collect()}, order, docs
+
+
+def _oracle(universe, cfg, n_epochs):
+    from mediacrawler_spark.oracle import CrawlOracle
+
+    return CrawlOracle(
+        universe.pages, universe.robots, universe.politeness,
+        default_budget=cfg.default_budget,
+        comments_per_page=cfg.comments_per_page,
+        max_comments_per_note=cfg.max_comments_per_note,
+        epoch_ts=cfg.epoch_ts,
+    ).run(universe.seeds, max_epochs=n_epochs)
+
+
+def test_fresh_epoch_builds_filter_once_as_build_then_insert(spark, udfs, tmp_path):
+    """A fresh epoch 0 stages the filter exactly once (no empty build
+    before admission), and its bitmaps are byte-identical to the old
+    two-step path: an empty build, then the admitted keys inserted."""
+    from mediacrawler_spark.operators.dedup import (
+        build_bloom_table,
+        filter_params_from_meta,
+        update_filter,
+    )
+
+    cfg = EngineConfig(max_comments_per_note=25)
+    cat = _SpyCatalog(spark, str(tmp_path / "snap_fresh"))
+    eng = CrawlEngine(spark, cat, udfs["pages"], udfs["robots"], udfs["politeness"], cfg)
+    res = eng.run(udfs["seeds"], max_epochs=1)
+    assert res.epochs[0].admitted > 0
+    assert cat.bloom_stages == {0: 1}
+
+    params = filter_params_from_meta(cat.meta()["bloom"])
+    keys = cat.read("seen").select("url_hash")
+    want = update_filter(build_bloom_table(keys.limit(0), params), keys, params)
+    as_dict = lambda df: {r["shard"]: bytes(r["bitmap"]) for r in df.collect()}  # noqa: E731
+    assert as_dict(cat.read("bloom")) == as_dict(want)
+
+
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_capacity_rebuild_after_admission_matches_oracle(
+    spark, universe, udfs, tmp_path, seen_filter
+):
+    """Every epoch ≥ 1 with a non-empty batch is forced into a capacity
+    rebuild: admission probes with the previous (full) filter, then one
+    build over seen ∪ admitted replaces it. Each such epoch stages the
+    filter exactly once, and the crawl still equals the oracle's."""
+    n_epochs = 4
+    cfg = EngineConfig(max_comments_per_note=25, seen_filter=seen_filter)
+    cat = _SpyCatalog(spark, str(tmp_path / f"snap_tight_{seen_filter}"))
+    eng = _TightEngine(spark, cat, udfs["pages"], udfs["robots"], udfs["politeness"], cfg)
+    res = eng.run(udfs["seeds"], max_epochs=n_epochs)
+    assert len(res.epochs) == n_epochs
+
+    batches = [e.admitted + e.deduped for e in res.epochs]
+    assert all(batches), batches
+    assert cat.bloom_stages == {e: 1 for e in range(n_epochs)}
+    assert len(eng.rebuilds) == n_epochs
+    assert eng.rebuilds[-1] == sum(e.admitted for e in res.epochs)
+    # the later probes really ran against a filter (not the empty-seen skip)
+    assert sum(e.deduped for e in res.epochs[1:]) > 0
+
+    want = _oracle(universe, cfg, n_epochs)
+    seen, order, docs = _crawl_state(eng)
+    assert seen == want.seen
+    assert order == want.fetch_order
+    assert docs == want.documents

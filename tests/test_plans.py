@@ -89,8 +89,9 @@ def test_epoch_job_count_bounded_and_flat(spark, udfs, tmp_path):
     10^4-epoch design point: the number of Spark jobs one epoch issues
     must be BOUNDED and must not grow with the epoch index (a lazy-plan
     leak or a per-epoch re-scan of history shows up here first).
-    Measured ~46-51 jobs/epoch on this universe (writes, persist,
-    dirty-part collect, footer-free counts keep it flat)."""
+    Measured 31-37 jobs/epoch on this universe (writes, persist,
+    dirty-part collect, footer-free counts and schema-pinned snapshot
+    reads keep it flat); the bound keeps the 13-job slack above that."""
     import tempfile
 
     from mediacrawler_spark.plans.epoch import CrawlEngine, EngineConfig
@@ -112,6 +113,6 @@ def test_epoch_job_count_bounded_and_flat(spark, udfs, tmp_path):
         if e.fetched == 0 and e.admitted == 0 and e.emitted == 0:
             break
     sc.setJobGroup(None, None)
-    assert max(counts) <= 64, counts
+    assert max(counts) <= 50, counts
     # flat: later epochs issue no more jobs than early ones (+ slack)
     assert counts[-1] <= counts[1] + 8, counts

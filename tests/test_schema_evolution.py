@@ -1,5 +1,5 @@
 """Schema evolution on snapshot append tables (sinks/snapshot.py
-stage_append / _read_append_dirs — the Iceberg add/drop-column
+stage_append / _read_dirs — the Iceberg add/drop-column
 schema-evolution analog): every increment records its schema as
 ``_schema.json`` beside the data (metadata, not footer scans); reads
 over increments that disagree align by name with nulls for missing
@@ -20,6 +20,21 @@ from mediacrawler_spark.sinks.snapshot import SnapshotCatalog, TimeTravelError
 
 def _cat(spark, tmp_path, name="se"):
     return SnapshotCatalog(spark, str(tmp_path / name))
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn issued) under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
 
 
 def _commit_epochs(cat, spark):
@@ -127,14 +142,23 @@ def test_compaction_preserves_union_schema(spark, tmp_path):
 
 def test_legacy_dirs_without_schema_file_keep_plain_read(spark, tmp_path):
     """Increments written before this feature have no _schema.json;
-    reads over them behave exactly as before (plain multi-dir scan)."""
+    reads over them behave exactly as before (plain multi-dir scan with
+    schema inference, a job at read time) — alone, or next to recorded
+    increments of the same schema."""
     cat = _cat(spark, tmp_path)
     for ep in range(2):
         cat.stage_append(spark.createDataFrame([(ep,)], ["id"]), "log", ep)
         cat.commit(ep)
         os.remove(os.path.join(cat.root, "log", f"e={ep}", "_schema.json"))
-    df = cat.read("log")
+    df, jobs = _jobs_in(spark, "legacy", lambda: cat.read("log"))
+    assert jobs >= 1
     assert df.columns == ["id"] and df.count() == 2
+    cat.stage_append(spark.createDataFrame([(2,)], ["id"]), "log", 2)
+    cat.commit(2)
+    mixed, jobs = _jobs_in(spark, "legacy-mixed", lambda: cat.read("log"))
+    assert jobs >= 1
+    assert mixed.columns == ["id"] and _rows(mixed) == [(0,), (1,), (2,)]
+    assert "Union" not in mixed._jdf.queryExecution().executedPlan().toString()
 
 
 def test_type_conflict_fails_loudly(spark, tmp_path):
@@ -147,3 +171,55 @@ def test_type_conflict_fails_loudly(spark, tmp_path):
     cat.commit(1)
     with pytest.raises(Exception, match="[Uu]nion|[Cc]ast|incompatible|INCOMPATIBLE"):
         cat.read("log").collect()
+
+
+def test_recorded_schema_reads_are_pinned_and_equal_inferred(spark, tmp_path):
+    """Every dir the catalog writes records its schema, and a read of
+    dirs that all agree passes it to the reader: no schema-inference job
+    at read time, and the same schema (Spark makes a user schema
+    nullable, as inference does) and rows as the inferred read. Covers a
+    replace version, an append dir, a compacted dir, and ptable leaves
+    drawn from two versions."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("tags", T.ArrayType(T.StringType(), False), False),
+        T.StructField("s", T.StructType([T.StructField("a", T.IntegerType(), False)]), True),
+    ])
+
+    def frame(lo, hi):
+        return spark.createDataFrame(
+            [(i, [f"t{i}"], (i * 2,) if i % 3 else None) for i in range(lo, hi)], schema
+        )
+
+    cat = _cat(spark, tmp_path)
+    cat.stage(frame(0, 5), "state")
+    for ep in range(3):
+        cat.stage_append(frame(10 * ep, 10 * ep + 4), "log", ep)
+    cat.stage_parts(
+        frame(0, 40).withColumn("_part", F.pmod("id", F.lit(4)).cast("int")), "pt", 4,
+        [0, 1, 2, 3],
+    )
+    cat.commit(0)
+    cat.stage_append(frame(100, 104), "clog", 0)
+    cat.stage_parts(
+        frame(40, 60).withColumn("_part", F.pmod("id", F.lit(4)).cast("int"))
+        .where("_part < 2"),
+        "pt", 4, [0, 1],
+    )
+    cat.commit(1)
+    for ep in (2, 3):
+        cat.stage_append(frame(100 * ep, 100 * ep + 4), "clog", ep)
+        cat.commit(ep)
+    assert cat.compact_appends("clog", max_dirs=2)
+    assert len({int(v) for v in cat.ptable_meta("pt")["parts"].values()}) == 2
+
+    head = cat.last_commit()
+    for table in ("state", "log", "clog", "pt"):
+        pinned, jobs = _jobs_in(spark, f"pinned-{table}", lambda: cat.read(table))
+        assert jobs == 0, (table, jobs)
+        inferred = spark.read.parquet(*cat._pin_paths(table, cat._rec_pins(head, table)))
+        assert pinned.schema == inferred.schema, table
+        assert _rows(pinned) == _rows(inferred), table
+

@@ -264,3 +264,69 @@ def test_bare_url_seeds_end_to_end(spark, universe, udfs, tmp_path):
     ).run(universe.seeds)
     assert oracle.seen == kindful.seen
     assert oracle.fetch_order == kindful.fetch_order
+
+
+def _messy_seed_url(i: int, url: str) -> str:
+    """A non-canonical spelling of a canonical fixture URL: mixed-case
+    scheme/host, default port, doubled/trailing slash, fragment and
+    tracking params (one form %-escapes, so it takes the python path)."""
+    scheme, rest = url.split("://", 1)
+    host, path = rest.split("/", 1)
+    sep = "&" if "?" in path else "?"
+    forms = [
+        f"{scheme}://{host.upper()}/{path}",
+        f"{scheme.upper()}://{host}:443/{path}{sep}utm_source=feed&spm=a.b",
+        f"{scheme}://{host.title()}:443//{path}#frag",
+        f"{scheme}://{host}/{path}{sep}utm_campaign=a%20b",
+        url,
+    ]
+    return forms[i % len(forms)]
+
+
+def test_noncanonical_seeds_canonicalized_once(spark, universe, udfs, tmp_path):
+    """seeds_to_candidates canonicalizes with the split form and the
+    epoch loop does not canonicalize the seed batch again. Its rows equal
+    the Column-hybrid form's, and a crawl from non-canonical seeds equals
+    the oracle's, which canonicalizes seeds with ``canonicalize_one``."""
+    from mediacrawler_spark.operators.frontier import seeds_to_candidates
+    from mediacrawler_spark.oracle import CrawlOracle
+    from mediacrawler_spark.plans.epoch import CrawlEngine, EngineConfig
+    from mediacrawler_spark.schemas import SEEDS_SCHEMA
+    from mediacrawler_spark.sinks.snapshot import SnapshotCatalog
+
+    messy = universe.seeds.copy()
+    messy["url"] = [_messy_seed_url(i, u) for i, u in enumerate(messy["url"])]
+    assert (messy["url"] != universe.seeds["url"]).sum() >= len(messy) // 2
+    seeds = spark.createDataFrame(messy, SEEDS_SCHEMA)
+
+    got = seeds_to_candidates(seeds)
+    # Column-hybrid form, then the (idempotent) split form
+    column = seeds_to_candidates(seeds.withColumn("url", canonicalize_urls(F.col("url"))))
+    assert got.schema == column.schema
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, column.collect()))
+    assert {r[0] for r in rows} == {canonicalize_one(u) for u in messy["url"]}
+    assert {r[1] for r in rows} == {spark_xxhash64_str(r[0]) for r in rows}
+
+    n_epochs = 3
+    cfg = EngineConfig(max_comments_per_note=25)
+    cat = SnapshotCatalog(spark, str(tmp_path / "snap_messy"))
+    eng = CrawlEngine(spark, cat, udfs["pages"], udfs["robots"], udfs["politeness"], cfg)
+    eng.run(seeds, max_epochs=n_epochs)
+    want = CrawlOracle(
+        universe.pages, universe.robots, universe.politeness,
+        default_budget=cfg.default_budget,
+        comments_per_page=cfg.comments_per_page,
+        max_comments_per_note=cfg.max_comments_per_note,
+        epoch_ts=cfg.epoch_ts,
+    ).run(messy, max_epochs=n_epochs)
+    assert {r["url"] for r in cat.read("seen").collect()} == want.seen
+    order: dict = {}
+    for r in eng.fetch_log().orderBy("host", "epoch", "host_rank").collect():
+        order.setdefault(r["host"], []).append((r["url"], r["epoch"], r["kind"]))
+    assert order == want.fetch_order
+    docs = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in eng.documents().collect()
+    }
+    assert docs == want.documents
