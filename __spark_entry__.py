@@ -360,21 +360,18 @@ def q_window_5min(spark, sf):
     )
 
 
-def q_stream_window_counts(spark, sf):
-    """§2.11 streaming, hard-oracled: the same tumbling event-time window
-    count as window_5min but executed by Structured Streaming — file
-    source → watermark → groupBy(window) → memory sink (complete mode,
-    availableNow trigger). The final materialized table must equal the
-    static/DuckDB answer, pinning that the streaming face's event-time
-    semantics agree with batch (streaming/frontier_stream.py is built on
-    the same shape)."""
-    sch = spark.read.parquet(f"{sf}/events.parquet").schema
-    name = "stream_window_counts_sink"
+def _stop_query(spark, name: str) -> None:
+    """Stop a still-active streaming query of this name, so a re-run can
+    start it again."""
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # the file-stream source needs a DIRECTORY; the testdata table is one
-    # parquet file — stage a stable symlink dir (idempotent per sf)
+
+
+def _events_stream(spark, sf):
+    """``events`` as a file stream. The file-stream source needs a
+    DIRECTORY; the testdata table is one parquet file — stage a stable
+    symlink dir (idempotent per sf)."""
     import hashlib
     import os
 
@@ -383,25 +380,43 @@ def q_stream_window_counts(spark, sf):
     link = os.path.join(src_dir, "events.parquet")
     if not os.path.exists(link):
         os.symlink(os.path.abspath(f"{sf}/events.parquet"), link)
-    src = spark.readStream.schema(sch).parquet(src_dir)
+    sch = spark.read.parquet(f"{sf}/events.parquet").schema
+    return spark.readStream.schema(sch).parquet(src_dir)
+
+
+def _drain_to_memory(spark, df, name: str, mode: str) -> DataFrame:
+    """Run a streaming query to completion (availableNow) into the memory
+    sink ``name`` and return the materialized table."""
+    _stop_query(spark, name)
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(name)
+
+
+def q_stream_window_counts(spark, sf):
+    """§2.11 streaming, hard-oracled: the same tumbling event-time window
+    count as window_5min but executed by Structured Streaming — file
+    source → watermark → groupBy(window) → memory sink (complete mode,
+    availableNow trigger). The final materialized table must equal the
+    static/DuckDB answer, pinning that the streaming face's event-time
+    semantics agree with batch (streaming/frontier_stream.py is built on
+    the same shape)."""
     # watermarks require TIMESTAMP (not NTZ); the cast keeps wall-clock
     # values (session tz round-trips through window + date_format)
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
+    src = _events_stream(spark, sf).withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), F.col("event_type"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_memory(spark, agg, "stream_window_counts_sink", "complete")
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm").alias("w_start"),
             "event_type",
@@ -419,22 +434,9 @@ def q_stream_dedup_keys(spark, sf):
     event_type); only the key columns are projected (first-wins payload
     columns would be partition-order-dependent), so the materialized
     result is deterministic and equals DuckDB's SELECT DISTINCT."""
-    sch = spark.read.parquet(f"{sf}/events.parquet").schema
-    name = "stream_dedup_keys_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    import hashlib
-    import os
-
-    src_dir = f"/tmp/mcs_stream_src_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf}/events.parquet"), link)
-    src = spark.readStream.schema(sch).parquet(src_dir)
     deduped = (
-        src.withColumn("ts", F.col("ts").cast("timestamp"))
+        _events_stream(spark, sf)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "10 minutes")
         .dropDuplicates(["user_id", "event_type"])
         .select(
@@ -442,15 +444,9 @@ def q_stream_dedup_keys(spark, sf):
             F.col("event_type"),
         )
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(spark, deduped, "stream_dedup_keys_sink", "append").orderBy(
+        "user_id", "event_type"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "event_type")
 
 
 def q_stream_session_counts(spark, sf):
@@ -466,38 +462,17 @@ def q_stream_session_counts(spark, sf):
     start = min ts, end = max ts + gap, exact bigint micros. Complete
     output mode: every session is in the final table (append would hold
     back sessions newer than the watermark)."""
-    sch = spark.read.parquet(f"{sf}/events.parquet").schema
-    name = "stream_session_counts_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    import hashlib
-    import os
-
-    src_dir = f"/tmp/mcs_stream_src_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf}/events.parquet"), link)
-    src = spark.readStream.schema(sch).parquet(src_dir)
     agg = (
-        src.withColumn("ts", F.col("ts").cast("timestamp"))
+        _events_stream(spark, sf)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "10 minutes")
         .groupBy(
             F.session_window("ts", "4 hours").alias("w"), F.col("user_id")
         )
         .agg(F.count("*").cast("bigint").alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_memory(spark, agg, "stream_session_counts_sink", "complete")
         .select(
             F.col("user_id").cast("bigint").alias("user_id"),
             F.unix_micros("w.start").alias("start_us"),
@@ -518,24 +493,10 @@ def q_stream_join_views_purchases(spark, sf):
     availableNow drains the source, so the final table must equal the
     static join — which the DuckDB oracle computes independently. All
     values exact bigint micros."""
-    sch = spark.read.parquet(f"{sf}/events.parquet").schema
-    name = "stream_join_vp_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    import hashlib
-    import os
-
-    src_dir = f"/tmp/mcs_stream_src_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf}/events.parquet"), link)
 
     def _side(evt, tag):
         s = (
-            spark.readStream.schema(sch)
-            .parquet(src_dir)
+            _events_stream(spark, sf)
             .filter(F.col("event_type") == evt)
             .withColumn("ts", F.col("ts").cast("timestamp"))
             .withWatermark("ts", "10 minutes")
@@ -554,16 +515,8 @@ def q_stream_join_views_purchases(spark, sf):
             "p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"
         ),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_memory(spark, joined, "stream_join_vp_sink", "append")
         .select(
             F.col("v_user").cast("bigint").alias("user_id"),
             F.col("v_event").cast("bigint").alias("view_event"),
@@ -615,9 +568,7 @@ def q_stream_admission(spark, sf):
         os.utime(dst, (1000 + k, 1000 + k))
     sch = spark.read.parquet(f"{base}/src/b0.parquet").schema
     name = "stream_admission"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
+    _stop_query(spark, name)
     stream = (
         spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1)

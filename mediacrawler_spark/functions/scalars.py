@@ -77,11 +77,6 @@ def s_epoch_to_ts(col: Column) -> Column:
     return F.timestamp_seconds(col.cast("bigint"))
 
 
-def rfc2822_to_ts(col: Column) -> Column:
-    """'Mon Dec 11 12:00:00 +0800 2023' → timestamp (tools/time_util.py:86-111)."""
-    return F.to_timestamp(col, "EEE MMM dd HH:mm:ss Z yyyy")
-
-
 def day_range(start: Column, end: Column) -> Column:
     """Array of days [start, end] inclusive — Bilibili per-day search slicing
     (media_platform/bilibili/core.py:100-127,176). Explode to get per-day seeds."""

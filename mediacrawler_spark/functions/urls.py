@@ -17,10 +17,10 @@ Here: one canonical form, one 64-bit key.
   (escapes, userinfo, IPv6, odd separators) pays the python slow path,
   which receives NULL for eligible rows so Arrow transfers and per-row
   parses scale with the weird tail, not the corpus.
-- ``with_url_key`` then computes ``xxhash64(canonical_url)`` with the
-  *built-in* JVM-side ``F.xxhash64`` — the hash never leaves codegen.
-- ``host_of`` / ``url_param`` are pure column expressions
-  (``parse_url`` — JVM-side, whole-stage codegen).
+- the key is ``xxhash64(canonical_url)`` with the *built-in* JVM-side
+  ``F.xxhash64`` — the hash never leaves codegen.
+- ``host_of`` is a pure column expression (``parse_url`` — JVM-side,
+  whole-stage codegen).
 """
 
 from __future__ import annotations
@@ -193,11 +193,6 @@ def host_of(url: Column) -> Column:
     return F.lower(F.parse_url(url, F.lit("HOST")))
 
 
-def url_param(url: Column, key: str) -> Column:
-    """Single query param (reference: extract_url_params_to_dict)."""
-    return F.parse_url(url, F.lit("QUERY"), F.lit(key))
-
-
 def url_path(url: Column) -> Column:
     return F.parse_url(url, F.lit("PATH"))
 
@@ -240,13 +235,6 @@ def _split_canonical_exprs(url_col: str) -> dict:
         "fast": _canonicalize_expr(u),
         "slow": _canonicalize_slow(u),
     }
-
-
-def with_url_key(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Adds url_hash (xxhash64, JVM built-in) + host columns."""
-    return df.withColumn("url_hash", F.xxhash64(F.col(url_col))).withColumn(
-        "host", host_of(F.col(url_col))
-    )
 
 
 # --- URL-kind dispatch for bare-URL seeds (S2) ------------------------------

@@ -8,8 +8,8 @@ One epoch = one Spark job DAG:
     fetch set ── fetch (corpus join / mapInPandas) ──► outcomes
     successes ──► span rows + successor candidates
     failures  ──► retry rows (backoff) / host quarantine
-    everything ──► ONE snapshot commit (frontier, seen, spans, fetch_log,
-    lineage) — resume re-reads the last commit (north_rule).
+    everything ──► ONE snapshot commit (frontier logs, seen, spans,
+    fetch_log, lineage) — resume re-reads the last commit (north_rule).
 
 The reference's equivalent is its nested asyncio loops (SURVEY §3.1); the
 epoch loop linearizes them: each platform page-loop iteration becomes a
@@ -19,6 +19,20 @@ epochs (risk §7.4.2 — throughput comes from breadth).
 Snapshot writes double as iterative-loop lineage truncation: each epoch's
 state is re-read from parquet, so the logical plan never grows with epoch
 count.
+
+The frontier is merge-on-read (the Iceberg-v2 equality-delete pattern): a
+folded base ptable plus the ``admitted``/``retries``/``fetched`` append
+logs committed since the last fold. ``(url_hash, attempt)`` identifies a
+frontier row — an admitted row has attempt 0 and seen-dedup admits each
+url_hash once; a retry of a row fetched at attempt k is inserted once with
+attempt k+1; a fetched row carries the attempt of the row it consumed — so
+
+    frontier = (base ∪ admitted ∪ retries) left_anti fetched
+               on (url_hash, attempt)
+
+An epoch only appends to the logs; maintenance folds them into a new base
+(the fold is the only frontier rewrite), so bytes written per epoch scale
+with the epoch's delta, never with |frontier|.
 """
 
 from __future__ import annotations
@@ -83,19 +97,16 @@ class EngineConfig:
     # compaction thresholds) when operational rewind matters more than
     # storage.
     expire_keep_last: int = 2
-    # frontier hash-partition count (pmod(url_hash, P) directory layout):
-    # a commit rewrites only partitions the epoch touched, so bytes written
-    # per epoch is O(delta/P share), not O(|frontier|). Size so one
-    # partition ≈ a few hundred MB at the design point (10^10 rows → P in
-    # the thousands); the sandbox default keeps partitions non-trivial at
-    # test scale while still exercising partial rewrites.
+    # hash-partition count (pmod(url_hash, P) directory layout) of the
+    # frontier's folded base, which only the maintenance fold rewrites.
+    # Size so one partition ≈ a few hundred MB at the design point (10^10
+    # rows → P in the thousands); seeds a fresh catalog's first fold.
     frontier_partitions: int = 32
-    # adaptive repartitioning: when the largest committed frontier
-    # partition exceeds this many bytes, maintenance doubles P via a
-    # full-dirty rewrite (VERDICT r03 #4 — P is otherwise pinned at
-    # catalog creation, and the 10^10 design point needs thousands of
-    # partitions a fresh catalog wouldn't start with). Default sized so a
-    # partition stays comfortably inside one executor task's memory.
+    # adaptive repartitioning: when the largest committed base partition
+    # exceeds this many bytes, the next fold writes the base with 2P
+    # partitions (VERDICT r03 #4 — the 10^10 design point needs thousands
+    # of partitions a fresh catalog wouldn't start with). Default sized so
+    # a partition stays comfortably inside one executor task's memory.
     frontier_max_part_bytes: int = 256 << 20
     # URL-seen prefilter kind (north_rule "bloom/cuckoo"): bloom is the
     # smaller append-only default; cuckoo supports DELETE for TTL/eviction
@@ -112,6 +123,11 @@ class EngineConfig:
     # to shard-wise cogroup (one shard per task, never the whole filter)
     bloom_broadcast_max_bytes: int = 32 << 20
     epoch_ts: int = 1_700_000_000  # deterministic "now" for robots TTL
+
+
+# the frontier's append logs; fetched rows are the equality deletes
+_FRONTIER_LOGS = ("admitted", "retries", "fetched")
+_ROW_KEY = ["url_hash", "attempt"]
 
 
 @dataclass
@@ -172,16 +188,44 @@ class CrawlEngine:
         self._host_col = host_of(F.col("url"))
 
     # -- state accessors (resume-aware) --------------------------------------
-    def _frontier(self) -> DataFrame:
-        df = self.catalog.read("frontier")
-        return df if df is not None else empty_frame(self.spark, FRONTIER_SCHEMA)
+    def _frontier_fold(self) -> dict:
+        """The fold meta of the last commit: ``folded_through`` (epoch of
+        the last fold) and ``log`` (epochs whose log increments are live
+        on top of the base). A snapshot without it predates merge-on-read:
+        its base already IS the full frontier, so it counts as folded
+        through its head and retained admitted/fetched increments are
+        never applied again."""
+        m = self.catalog.meta().get("frontier")
+        if m is None:
+            return {"folded_through": self.catalog.committed_epoch(), "log": []}
+        return {"folded_through": int(m["folded_through"]), "log": list(m["log"])}
 
-    def _frontier_nparts(self) -> int:
-        """Partition count of the frontier ptable — pinned in the snapshot
-        (a resumed crawl must keep the layout it committed with), config
-        only seeds a fresh catalog."""
-        ent = self.catalog.ptable_meta("frontier")
-        return int(ent["n"]) if ent else self.cfg.frontier_partitions
+    def _frontier(self) -> DataFrame:
+        """The committed frontier: base ∪ admitted ∪ retries left_anti
+        fetched on (url_hash, attempt), over the log epochs since the
+        fold. A log increment the last commit no longer pins (pruned
+        before a fold) raises — it never silently shrinks the frontier."""
+        base = self.catalog.read("frontier")
+        log = self._frontier_fold()["log"]
+        if not log:
+            return base if base is not None else empty_frame(self.spark, FRONTIER_SCHEMA)
+        live = self.catalog.read_increments("admitted", log).unionByName(
+            self.catalog.read_increments("retries", log)
+        )
+        if base is not None:
+            live = base.unionByName(live)
+        deletes = self.catalog.read_increments("fetched", log).select(*_ROW_KEY)
+        return live.join(deletes, on=_ROW_KEY, how="left_anti")
+
+    def _frontier_rows(self) -> int:
+        """Exact committed frontier row count from parquet footers only —
+        no Spark job: each fetched row deletes exactly one live row."""
+        n = self.catalog.ptable_rows("frontier")
+        for e in self._frontier_fold()["log"]:
+            n += self.catalog.staged_append_rows("admitted", e)
+            n += self.catalog.staged_append_rows("retries", e)
+            n -= self.catalog.staged_append_rows("fetched", e)
+        return n
 
     def _seen(self) -> DataFrame:
         df = self.catalog.read("seen")
@@ -226,7 +270,7 @@ class CrawlEngine:
         and the commit meta pins it for resume. Bounds both the
         per-epoch dirty-shard write (O(target) per touched shard, not
         O(|filter|/16)) and the unit of work of the shard-wise cogroup
-        probe — the same geometric discipline as _maybe_grow_frontier."""
+        probe — the same geometric discipline as the frontier fold's P."""
         import math
 
         bytes_per_key = SEEN_FILTERS[self.cfg.seen_filter].bytes_per_key(self.cfg.bloom_fpp)
@@ -256,7 +300,6 @@ class CrawlEngine:
         admitted: DataFrame,
         n_batch: int,
         n_admitted: int,
-        dirty_shards: list[int] | None = None,
     ) -> dict:
         """Bring the filter past this epoch's admission: the O(delta)
         insert of :meth:`_advance_bloom`, or — when there is no filter or
@@ -285,7 +328,7 @@ class CrawlEngine:
         ``n_seen + n_batch``.
         """
         if bloom is not None and bloom["n_inserted"] + n_batch <= bloom["capacity"]:
-            return self._advance_bloom(bloom, admitted, n_admitted, seen, dirty_shards)
+            return self._advance_bloom(bloom, admitted, n_admitted, seen)
         keys = admitted.select("url_hash")
         if bloom is not None:
             n_seen = bloom["n_inserted"]
@@ -318,7 +361,6 @@ class CrawlEngine:
         admitted: DataFrame,
         n_admitted: int,
         seen: DataFrame,
-        dirty_shards: list[int] | None = None,
     ) -> dict:
         """Fold the epoch's admitted delta into the persisted filter —
         one cogroup insert of the dirty shards with the admitted keys:
@@ -326,11 +368,8 @@ class CrawlEngine:
         independent of |seen| (VERDICT r01 item 3: never rebuild from the
         full seen set; VERDICT r02 item 1: never rewrite untouched
         shards). Zero-admission epochs (backoff/drain tail — common) skip
-        the insert+stage entirely.
-
-        ``dirty_shards`` = pmod(url_hash, n_shards) over the admitted keys
-        (the caller usually knows it from the shared dirty-partition job);
-        None computes it here.
+        the insert+stage entirely. The dirty shards are pmod(url_hash,
+        n_shards) over the admitted keys (one small collect).
 
         Kick-chain inserts can fail probabilistically even under nominal
         capacity (exhaustion near the 0.84 load target); the
@@ -342,18 +381,15 @@ class CrawlEngine:
             return bloom
         params = bloom["params"]
         keys = admitted.select("url_hash")
-        if dirty_shards is None:
-            dirty_shards = [
-                int(r["s"])
-                for r in keys.select(
-                    F.pmod(F.col("url_hash"), F.lit(params.n_shards)).alias("s")
-                )
-                .distinct()
-                .collect()
-            ]
-        old_dirty = bloom["df"].where(
-            F.col("shard").isin([int(s) for s in dirty_shards])
-        )
+        dirty_shards = [
+            int(r["s"])
+            for r in keys.select(
+                F.pmod(F.col("url_hash"), F.lit(params.n_shards)).alias("s")
+            )
+            .distinct()
+            .collect()
+        ]
+        old_dirty = bloom["df"].where(F.col("shard").isin(dirty_shards))
         n_inserted = bloom["n_inserted"] + n_admitted
         try:
             self._stage_bloom(
@@ -393,35 +429,34 @@ class CrawlEngine:
             )
         return df
 
-    def _maybe_grow_frontier(self) -> bool:
-        """Double the frontier partition count when the largest committed
-        partition leaf exceeds ``frontier_max_part_bytes``.
+    def _fold_frontier(self, epoch: int) -> None:
+        """Fold the frontier logs into a new base: ONE full rewrite of the
+        merged view, committed at ``epoch`` with the new fold meta, then
+        prune the folded increments. The meta already excludes them, so
+        the prune is pure garbage collection — a crash between the fold
+        commit and the prune loses nothing.
 
-        One full-dirty rewrite commit under the new ``pmod(url_hash, 2P)``
-        layout; the next epoch picks the new P up from the snapshot pin
-        (``_frontier_nparts``) and goes back to O(dirty)-partition
-        rewrites. Doubling keeps total re-layout work O(|frontier|·log P)
-        over a whole crawl — the geometric-growth argument of the bloom
-        capacity policy. Runs between epochs only (maintenance), so no
-        pending stages and no live lazy readers of the old layout."""
+        The fold chooses the base's partition count: the committed P
+        (``frontier_partitions`` on a fresh catalog), doubled when the
+        largest committed leaf exceeds ``frontier_max_part_bytes`` —
+        doubling keeps total re-layout work O(|frontier|·log P) over a
+        crawl, the geometric-growth argument of the bloom capacity
+        policy."""
         ent = self.catalog.ptable_meta("frontier")
-        if not ent or not ent["parts"]:
-            return False
+        n = int(ent["n"]) if ent else self.cfg.frontier_partitions
         sizes = self.catalog.ptable_part_bytes("frontier")
-        if not sizes or max(sizes.values()) <= self.cfg.frontier_max_part_bytes:
-            return False
-        new_n = int(ent["n"]) * 2
-        part = F.pmod(F.col("url_hash"), F.lit(new_n)).cast("int")
+        if sizes and max(sizes.values()) > self.cfg.frontier_max_part_bytes:
+            n *= 2
+        part = F.pmod(F.col("url_hash"), F.lit(n)).cast("int")
         self.catalog.stage_parts(
-            self.catalog.read("frontier")
-            .withColumn("_part", part)
-            .repartition(new_n, "_part"),
+            self._frontier().withColumn("_part", part).repartition(n, "_part"),
             "frontier",
-            new_n,
-            list(range(new_n)),
+            n,
+            list(range(n)),
         )
-        self.catalog.commit(self.catalog.committed_epoch())
-        return True
+        self.catalog.commit(epoch, meta={"frontier": {"folded_through": epoch, "log": []}})
+        for t in _FRONTIER_LOGS:
+            self.catalog.prune_appends(t, min_epoch=epoch + 1)
 
     def _migrate_legacy_state(self) -> None:
         """Fold a pre-ptable snapshot (frontier/bloom committed as FULL
@@ -429,12 +464,11 @@ class CrawlEngine:
         full-dirty migration commit before the first resumed epoch.
 
         Without this, resuming an old-format snapshot silently corrupts
-        state (ADVICE r03 medium): ``read_parts('frontier', dirty)``
-        returns None — the epoch's touched set collapses to the admitted
-        delta, losing every committed deferred frontier row — and
-        ``stage_parts('bloom', base=None)`` keeps only dirty pins, so
-        clean shards vanish and the definitely-new fast path (which skips
-        the left_anti confirm) re-admits already-seen URLs."""
+        state (ADVICE r03 medium): ``stage_parts('bloom', base=None)``
+        keeps only dirty pins, so clean shards vanish and the
+        definitely-new fast path (which skips the left_anti confirm)
+        re-admits already-seen URLs. The migrated frontier becomes the
+        base, with no fold meta (folded through the head)."""
         needs = [
             t
             for t in ("frontier", "bloom")
@@ -480,6 +514,7 @@ class CrawlEngine:
             candidates = self._candidates()
 
         frontier = self._frontier()
+        fold = self._frontier_fold()
         seen = self._seen()
         quarantine = self._quarantine()
         bloom = self._load_bloom()
@@ -559,41 +594,8 @@ class CrawlEngine:
             self.catalog.stage_append(fetched, "fetched", epoch)
             fetched = self.catalog.read_staged("fetched", epoch)
             n_fetched = self.catalog.staged_append_rows("fetched", epoch)
-
-            # dirty-partition discovery: the epoch's frontier mutations are
-            # exactly +admitted −fetched +retries (retries ⊆ fetched), so
-            # the touched frontier partitions — and the filter shards the
-            # admitted keys land in — come from ONE tiny aggregate over the
-            # two already-materialized delta tables.
-            n_parts = self._frontier_nparts()
-            part = F.pmod(F.col("url_hash"), F.lit(n_parts)).cast("int")
-            if n_admitted or n_fetched:
-                # a rebuild (no filter yet) rewrites every shard anyway
-                shard = (
-                    F.pmod(F.col("url_hash"), F.lit(bloom["params"].n_shards)).cast("int")
-                    if bloom is not None
-                    else F.lit(None).cast("int")
-                )
-                drow = (
-                    admitted.select(part.alias("fp"), shard.alias("sh"))
-                    .unionByName(
-                        fetched.select(
-                            part.alias("fp"), F.lit(None).cast("int").alias("sh")
-                        )
-                    )
-                    .agg(
-                        F.collect_set("fp").alias("fp"),
-                        F.collect_set("sh").alias("sh"),
-                    )
-                    .collect()[0]
-                )
-                dirty_parts = sorted(int(x) for x in drow["fp"])
-                dirty_shards = sorted(int(x) for x in drow["sh"])
-            else:
-                dirty_parts, dirty_shards = [], []
             bloom = self._update_bloom(
-                bloom, None if epoch == 0 else seen, admitted, n_batch, n_admitted,
-                dirty_shards,
+                bloom, None if epoch == 0 else seen, admitted, n_batch, n_admitted
             )
 
             out = classify_outcomes(fetched, epoch)
@@ -619,37 +621,10 @@ class CrawlEngine:
                 F.col("status").cast("int"),
             )
 
-            # 5. state transition — the frontier is a hash-partitioned
-            # ptable: ONLY dirty partitions are rewritten (their full new
-            # content = kept rows minus fetched plus retries; admitted rows
-            # are in dirty partitions by construction). Clean partitions
-            # keep their committed pins — bytes written per epoch is
-            # O(dirty partitions), not O(|frontier|) (VERDICT r02 item 1).
-            if dirty_parts:
-                # read ONLY the dirty leaf dirs of the committed frontier
-                # (directory-level pruning — clean partitions are never
-                # scanned) and the admitted delta (all in dirty partitions
-                # by construction), instead of filtering the full frontier
-                committed_touched = self.catalog.read_parts("frontier", dirty_parts)
-                touched = (
-                    admitted
-                    if committed_touched is None
-                    else committed_touched.unionByName(admitted)
-                )
-                deferred_dirty = touched.join(
-                    fetched.select("url_hash"), on="url_hash", how="left_anti"
-                )
-                frontier_next_dirty = deferred_dirty.select(
-                    *FRONTIER_COLS
-                ).unionByName(out["retries"].select(*FRONTIER_COLS))
-                self.catalog.stage_parts(
-                    frontier_next_dirty.withColumn("_part", part).repartition(
-                        len(dirty_parts), "_part"
-                    ),
-                    "frontier",
-                    n_parts,
-                    dirty_parts,
-                )
+            # 5. state transition — the frontier only appends: admitted and
+            # fetched are already staged, the retries complete its log
+            # (bytes written scale with the delta, not |frontier|)
+            self.catalog.stage_append(out["retries"], "retries", epoch)
             # expired rows (quarantined_until ≤ this epoch) can never block
             # again — selection at epoch E' > epoch needs until > E'. Drop
             # them here so the committed table is O(active quarantines),
@@ -697,7 +672,10 @@ class CrawlEngine:
                 "committed_at", F.lit(cfg.epoch_ts + epoch).cast("long")
             )
             self.catalog.stage_append(lineage_e, "lineage", epoch)
-            self.catalog.commit(epoch, meta={"bloom": self._bloom_meta(bloom)})
+            fold = {**fold, "log": fold["log"] + [epoch]}
+            self.catalog.commit(
+                epoch, meta={"bloom": self._bloom_meta(bloom), "frontier": fold}
+            )
 
             if epoch % 8 == 7:
                 # Iceberg maintenance analog: compact accumulated append
@@ -705,13 +683,11 @@ class CrawlEngine:
                 # swapped-out append dirs (expire_snapshots, risk §7.4.5)
                 for t in ("seen", "span_rows", "fetch_log", "lineage"):
                     self.catalog.compact_appends(t, cfg.compact_appends_after)
-                # admitted/fetched are single-epoch materialization
-                # artifacts, never read after their commit — drop instead
-                # of compacting (VERDICT r03 #3: retained forever they
-                # duplicate seen/fetch_log, ~2× long-run snapshot bytes)
-                for t in ("admitted", "fetched"):
-                    self.catalog.prune_appends(t, min_epoch=epoch - 1)
-                self._maybe_grow_frontier()
+                # the frontier logs are folded into a new base and dropped
+                # (VERDICT r03 #3: retained forever they duplicate
+                # seen/fetch_log, ~2× long-run snapshot bytes)
+                self._fold_frontier(epoch)
+                fold = self._frontier_fold()
                 self.catalog.expire_versions(keep_last=cfg.expire_keep_last)
                 self.catalog.roll_log(keep=2, max_lines=cfg.commit_log_max_lines)
 
@@ -729,7 +705,7 @@ class CrawlEngine:
             )
             if n_fetched == 0 and n_emitted == 0 and n_admitted == 0:
                 # frontier may still hold backoff rows; drained otherwise
-                # (footer-metadata count of the committed ptable — no job)
-                if self.catalog.ptable_rows("frontier") == 0:
+                # (footer-metadata count — no job)
+                if self._frontier_rows() == 0:
                     break
         return result

@@ -11,12 +11,6 @@ this module implements the same contract over parquet:
   point (torn writes of uncommitted parquet dirs are simply never
   referenced, exactly like Iceberg's metadata-pointer swap),
 - resume = read the last complete commit line.
-
-``merge_upsert`` reproduces the reference's SELECT-then-INSERT-or-UPDATE
-sink (store/xhs/xhs_store_impl.py:114-172): ``when matched update``
-preserves insert-only columns (``add_ts`` — xhs_store_impl.py:130-131),
-``when not matched insert``. Implemented as anti-join + union (the
-MERGE INTO emulation for a parquet-backed table).
 """
 
 from __future__ import annotations
@@ -103,6 +97,27 @@ class SnapshotCatalog:
                     continue  # torn crash remnant — never a record prefix
         return recs
 
+    def _refuse_pending(self, op: str) -> None:
+        """Maintenance and history operations commit (or rewrite the log)
+        on their own, so running one with pending stages would publish a
+        half-finished epoch — refused to keep every commit atomic."""
+        pending = {
+            kind: sorted(names)
+            for kind, names in (
+                ("tables", self._pending),
+                ("appends", self._pending_appends),
+                ("parts", self._pending_parts),
+                ("drops", self._pending_drops),
+            )
+            if names
+        }
+        if pending:
+            raise RuntimeError(
+                f"{op} with uncommitted staged state would publish a "
+                "half-finished epoch — commit or discard the pending stages "
+                f"first (pending: {pending})"
+            )
+
     def last_commit(self) -> dict | None:
         recs = self._read_commits()
         return recs[-1] if recs else None
@@ -124,13 +139,7 @@ class SnapshotCatalog:
         recent commits stay discoverable. Refused with pending staged
         state (same atomicity argument as compact_appends). Returns True
         if a roll happened."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("roll_log with uncommitted staged state")
+        self._refuse_pending("roll_log")
         if self._n_commits <= max_lines:
             return False
         recs = self._read_commits()[-max(1, keep):]
@@ -150,7 +159,7 @@ class SnapshotCatalog:
 
     def stage(self, df: DataFrame, table: str) -> None:
         """Write the next full version of ``table`` (not yet visible).
-        For replace-style tables (frontier churn, quarantine). Staging the
+        For replace-style tables (candidates, quarantine). Staging the
         same table twice before a commit writes a second version — never
         overwrites the first (a lazy plan may still be reading it). The
         version records its schema like :meth:`stage_append`."""
@@ -228,9 +237,10 @@ class SnapshotCatalog:
 
     # -- hash-partitioned replace tables (delta commits) ---------------------
     # A replace table that is large and sparsely mutated per epoch (the
-    # frontier at the 10^10 design point; the sharded seen-filter bitmaps)
-    # must NOT be rewritten in full every commit (VERDICT r02 "What's wrong"
-    # #1: ~TB-scale write amplification per epoch). Layout:
+    # sharded seen-filter bitmaps) must NOT be rewritten in full every
+    # commit (VERDICT r02 "What's wrong" #1: ~TB-scale write amplification
+    # per epoch). The frontier's folded base uses the same layout but is
+    # rewritten in full, once per fold (plans/epoch.py). Layout:
     #
     #     <root>/<table>/v=<n>/_part=<k>/    (immutable leaf dirs)
     #
@@ -320,29 +330,14 @@ class SnapshotCatalog:
             return None
         return self._read_dirs(self._ptable_paths(ent, table))
 
-    def read_parts(self, table: str, parts: list[int]) -> DataFrame | None:
-        """Read ONLY the given partitions of the committed partitioned
-        table — directory-level partition pruning (the epoch's
-        delta-rewrite input never scans clean partitions). Partitions
-        with no pin are simply absent; returns None if none of the
-        requested partitions exist."""
-        ent = self._ptables.get(table)
-        if not ent:
-            return None
-        want = {str(int(k)) for k in parts}
-        sub = {k: v for k, v in ent["parts"].items() if k in want}
-        if not sub:
-            return None
-        return self._read_dirs(self._ptable_paths({"n": ent["n"], "parts": sub}, table))
-
     def legacy_version(self, table: str) -> int | None:
         """Version pin of a FULL replace table for a name that is NOT a
         ptable — the pre-partitioned snapshot format (rounds ≤2 committed
         frontier/bloom this way). Migration detection hook: a resumed
         crawl must fold such tables into the partitioned layout before
-        the first epoch (ADVICE r03 medium — read_parts() of a legacy
-        table returns None, silently dropping committed deferred frontier
-        rows and clean bloom shards)."""
+        the first epoch (ADVICE r03 medium — a partial ``stage_parts``
+        over a legacy table has no base, silently dropping clean bloom
+        shards)."""
         if self._ptables.get(table) or self._pending_parts.get(table):
             return None
         return self._pending.get(table, self._versions.get(table))
@@ -446,8 +441,8 @@ class SnapshotCatalog:
         return parquet_rows(self._path(table, self._pending[table]))
 
     def staged_append_rows(self, table: str, epoch: int) -> int:
-        """Row count of a staged epoch increment — parquet footers only,
-        zero Spark jobs."""
+        """Row count of one epoch increment (staged or committed) —
+        parquet footers only, zero Spark jobs."""
         return parquet_rows(os.path.join(self.root, table, f"e={epoch}"))
 
     def read_staged(self, table: str, epoch: int) -> DataFrame:
@@ -455,6 +450,21 @@ class SnapshotCatalog:
         to materialize a stage mid-epoch so downstream consumers don't
         recompute its plan."""
         return self._read_dirs([os.path.join(self.root, table, f"e={epoch}")])
+
+    def read_increments(self, table: str, epochs: list[int]) -> DataFrame:
+        """One scan of the given committed epoch increments of an append
+        table (a reader that needs exactly these rows — the frontier's
+        logs since its fold). Raises if the last commit does not pin one
+        of them (pruned, compacted away or never committed): such a
+        reader must never silently get fewer rows."""
+        pinned = {str(x) for x in self._appends.get(table, [])}
+        missing = [e for e in epochs if str(e) not in pinned]
+        if missing:
+            raise LookupError(
+                f"increments {missing} of {table!r} are not pinned by the "
+                f"last commit (epoch {self._epoch})"
+            )
+        return self._read_dirs([os.path.join(self.root, table, f"e={e}") for e in epochs])
 
     def read(self, table: str) -> DataFrame | None:
         ent = self._ptables.get(table)
@@ -618,7 +628,7 @@ class SnapshotCatalog:
         append tables whose old labels survived diff O(delta) increment
         dirs only; ptables compare ONLY partitions whose pinned version
         changed (identical pins are immutable dirs — skipped entirely,
-        so an epoch that touched 3 of 4096 frontier partitions diffs 3);
+        so an epoch that touched 3 of 4096 filter shards diffs 3);
         plain replace tables with an unchanged version pin return None
         without reading. Returns None when nothing changed."""
         lo = None if from_epoch < 0 else self._rec_pins(
@@ -730,13 +740,7 @@ class SnapshotCatalog:
         (:class:`RuntimeError`) with pending staged state, same
         atomicity stance as :meth:`compact_appends`. Returns the restored
         commit record."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("rollback_to with uncommitted staged state")
+        self._refuse_pending("rollback_to")
         recs = self._read_commits()
         idx = [i for i, r in enumerate(recs) if int(r["epoch"]) == epoch]
         if not idx:
@@ -902,18 +906,7 @@ class SnapshotCatalog:
         swap is a commit, so pending (uncommitted) stages would be
         published half-finished — refused outright to preserve crash
         atomicity. Returns True if a compaction ran."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError(
-                "compact_appends with uncommitted staged state would publish "
-                "a half-finished epoch — commit or discard the pending "
-                f"stages first (pending={sorted(self._pending)}, "
-                f"pending_appends={sorted(self._pending_appends)})"
-            )
+        self._refuse_pending("compact_appends")
         labels = [str(x) for x in self._appends.get(table, [])]
         small = [lab for lab in labels if not lab.startswith("c")]
         if len(small) <= max_dirs:
@@ -944,13 +937,7 @@ class SnapshotCatalog:
         atomicity stance as compact_appends: refused with pending staged
         state; the swap is a same-epoch metadata commit. Returns the
         number of increments dropped."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("prune_appends with uncommitted staged state")
+        self._refuse_pending("prune_appends")
         labels = [str(x) for x in self._appends.get(table, [])]
 
         def label_epoch(lab: str) -> int:
@@ -992,13 +979,7 @@ class SnapshotCatalog:
         """
         from pyspark.sql import Column
 
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("delete_where with uncommitted staged state")
+        self._refuse_pending("delete_where")
         if table in self._versions or table in self._ptables:
             raise ValueError(
                 "delete_where supports append tables only — rewrite "
@@ -1115,12 +1096,3 @@ class SnapshotCatalog:
                     removed += 1
         return removed
 
-
-def merge_upsert(existing: DataFrame | None, updates: DataFrame, key: str) -> DataFrame:
-    """MERGE INTO emulation: rows of ``updates`` win on key collision;
-    unmatched existing rows are kept. Insert-only column semantics are the
-    caller's job (pass updates that already carry the preserved values)."""
-    if existing is None:
-        return updates
-    kept = existing.join(updates.select(key).distinct(), on=key, how="left_anti")
-    return kept.unionByName(updates)

@@ -169,7 +169,8 @@ def full_crawl(spark, udfs, crawl_cfg, partial_crawl, tmp_path_factory):
 @pytest.fixture(scope="session")
 def snapshot_state():
     """Comparable end-state of an engine: committed epoch, seen set,
-    document spans, per-host fetch order, pending frontier rows."""
+    document spans, per-host fetch order, pending frontier rows (the
+    merged base + log read)."""
 
     def _state(eng):
         cat = eng.catalog
@@ -189,7 +190,7 @@ def snapshot_state():
                 .orderBy("host", "epoch", "host_rank")
                 .collect()
             ],
-            "frontier_rows": cat.ptable_rows("frontier"),
+            "frontier_rows": eng._frontier().count(),
         }
 
     return _state

@@ -217,15 +217,22 @@ def test_prune_appends_drops_old_single_epoch_artifacts(spark, tmp_path):
 
 
 def test_engine_maintenance_prunes_admitted_fetched(full_crawl):
-    """After an e2e run whose maintenance cycle fired, only the tail
-    window of admitted/fetched increments survives on disk (inspects the
-    shared canonical run — read-only assertions)."""
+    """After an e2e run whose maintenance cycle fired, only the frontier
+    log increments committed after the last fold survive — exactly the
+    log epochs of the fold meta — and the folded ones are gone from disk
+    (inspects the shared canonical run — read-only assertions)."""
+    import os
+
     cat = full_crawl["eng"].catalog
     last = full_crawl["epochs"][-1].epoch
     assert last >= 7, "run must cross a maintenance cycle (epoch 7)"
-    for t in ("admitted", "fetched"):
-        labs = [str(x) for x in cat._appends[t]]
-        # everything before the last maintenance floor (7 - 1) is gone
-        assert all(not lab.startswith("c") for lab in labs)
-        assert min(int(lab) for lab in labs) >= 6, (t, labs)
+    folded = last - (last + 1) % 8  # the last epoch ≡ 7 mod 8
+    fold = cat.meta()["frontier"]
+    assert fold["folded_through"] == folded
+    assert fold["log"] == list(range(folded + 1, last + 1))
+    for t in ("admitted", "retries", "fetched"):
+        labs = sorted(int(x) for x in cat._appends[t])
+        assert labs == fold["log"], (t, labs)
+        on_disk = os.listdir(os.path.join(cat.root, t))
+        assert all(int(d[2:]) > folded for d in on_disk if d.startswith("e=")), (t, on_disk)
     assert cat.fsck() == []

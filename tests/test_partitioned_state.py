@@ -1,19 +1,20 @@
 """Partitioned delta-commits (VERDICT r02 item 1): replace-style state
 tables must rewrite only the partitions an epoch touched, never the full
 table. Covers the SnapshotCatalog ptable mechanism directly, then the
-engine-level 'done' criterion — bytes/partitions written per epoch are
-O(delta), with unchanged e2e results (the oracle-equality suite runs the
-same engine elsewhere)."""
+engine-level 'done' criterion on the merge-on-read frontier — an epoch
+only appends its logs, so bytes written per epoch are O(delta); the fold
+is the only frontier rewrite — with unchanged e2e results."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from mediacrawler_spark.fixtures import UniverseParams, build_universe
+from mediacrawler_spark.operators.frontier import FRONTIER_COLS
+from mediacrawler_spark.plans.epoch import _FRONTIER_LOGS as _LOGS
 from mediacrawler_spark.plans.epoch import CrawlEngine, EngineConfig
 from mediacrawler_spark.oracle import CrawlOracle
 from mediacrawler_spark.schemas import (
@@ -106,85 +107,114 @@ def test_expire_keeps_pinned_leaves_across_versions(spark, tmp_path):
     assert cat.fsck() == []
 
 
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_epoch_writes_are_delta_not_full_state(spark, tmp_path, seen_filter):
-    """The 'done' criterion: per-epoch frontier/filter writes touch only
-    dirty partitions/shards. Build a frontier much wider than any epoch's
-    fetch set, then assert later commits repin a small fraction of
-    partitions while the table keeps spanning many."""
-    uni = build_universe(
-        UniverseParams(
-            n_notes=240,
-            n_hosts=3,
-            n_singleton_hosts=0,
-            n_keywords=1,
-            search_pages_per_keyword=1,
-            max_comments_per_note=10,
-            budget_hot=2,
-            budget_warm=2,
-        )
-    )
-    cfg = EngineConfig(
+# ---- the merge-on-read frontier on a wide-frontier crawl ------------------
+# 240 notes on 3 hosts at budget 2: the frontier stays far wider than any
+# epoch's fetch set, and the per-epoch delta is larger than P = 8.
+_WIDE = UniverseParams(
+    n_notes=240,
+    n_hosts=3,
+    n_singleton_hosts=0,
+    n_keywords=1,
+    search_pages_per_keyword=1,
+    max_comments_per_note=10,
+    budget_hot=2,
+    budget_warm=2,
+)
+_WIDE_P = 8
+_WIDE_EPOCHS = 10  # crosses the maintenance fold at epoch 7
+_WIDE_COPIES = (4, 8)  # snapshot copies kept mid-cycle, before/after the fold
+
+
+def _du(path) -> int:
+    total = 0
+    for dirpath, _dirs, files in os.walk(path):
+        total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
+    return total
+
+
+def _wide_cfg(seen_filter="bloom", **kw) -> EngineConfig:
+    return EngineConfig(
         default_budget=2,
         max_comments_per_note=10,
-        max_epochs=6,
-        frontier_partitions=64,
+        frontier_partitions=_WIDE_P,
         seen_filter=seen_filter,
+        **kw,
     )
-    root = str(tmp_path / f"snap_delta_{seen_filter}")
-    cat = SnapshotCatalog(spark, root)
+
+
+class _PartsSpy(SnapshotCatalog):
+    """Records every stage_parts table, in call order."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.parts_calls: list[str] = []
+
+    def stage_parts(self, df, table, n_parts, dirty, part_col="_part"):
+        self.parts_calls.append(table)
+        super().stage_parts(df, table, n_parts, dirty, part_col)
+
+
+def _frontier_bytes(cat: SnapshotCatalog, log: list[int]) -> int:
+    """Live frontier bytes: the base's pinned leaves plus the log
+    increments on top of it."""
+    base = sum(cat.ptable_part_bytes("frontier").values())
+    return base + sum(_du(os.path.join(cat.root, t, f"e={e}")) for t in _LOGS for e in log)
+
+
+def crawl_wide(spark, uni, root, seen_filter, n_epochs=_WIDE_EPOCHS, copies=()):
+    """Crawl the wide universe one epoch per ``run`` call and record, per
+    epoch: its stats, the tables it staged as partitions, the bytes it
+    wrote under ``frontier/`` (new base version dirs) and the bytes of its
+    log increments, the live frontier bytes, the footer row count and the
+    merged read's row count. ``copies`` names epochs after which the
+    snapshot dir is copied to ``<root>_at<epoch>``."""
+    import shutil
+
     pages = spark.createDataFrame(uni.pages, PAGES_SCHEMA)
     robots = spark.createDataFrame(uni.robots, ROBOTS_SCHEMA)
     politeness = spark.createDataFrame(uni.politeness, POLITENESS_SCHEMA)
     seeds = spark.createDataFrame(uni.seeds, SEEDS_SCHEMA)
-    eng = CrawlEngine(spark, cat, pages, robots, politeness, cfg)
-    res = eng.run(seeds, max_epochs=6)
-    assert len(res.epochs) == 6
-
-    commits = []
-    with open(os.path.join(root, "_commits.jsonl")) as f:
-        for line in f:
-            commits.append(json.loads(line))
-    pins = [c.get("ptables", {}).get("frontier", {}).get("parts", {}) for c in commits]
-
-    def changed(a, b):
-        keys = set(a) | set(b)
-        return sum(1 for k in keys if a.get(k) != b.get(k))
-
-    total_parts = len(pins[-1])
-    assert total_parts >= 32, f"frontier should span many partitions: {total_parts}"
-    for e in range(2, 6):
-        st = res.epochs[e]
-        delta_rows = st.fetched + st.admitted
-        ch = changed(pins[e - 1], pins[e])
-        # each delta row dirties at most one partition (+slack for drops)
-        assert ch <= max(2 * delta_rows, 4), (e, ch, delta_rows)
-        assert ch < total_parts / 2, (e, ch, total_parts)
-    # pins must span several distinct versions — old partitions not rewritten
-    assert len({int(v) for v in pins[-1].values()}) >= 3
-
-    # BYTES criterion: a later epoch's frontier version dir must be a small
-    # fraction of the table's total footprint (the old full-rewrite wrote
-    # ~all of it every epoch)
-    def _du(path):
-        total = 0
-        for dirpath, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-        return total
-
+    cat = _PartsSpy(spark, root)
+    eng = CrawlEngine(spark, cat, pages, robots, politeness, _wide_cfg(seen_filter))
     fdir = os.path.join(root, "frontier")
-    per_version = {
-        int(e.split("=", 1)[1]): _du(os.path.join(fdir, e))
-        for e in os.listdir(fdir)
-        if e.startswith("v=")
-    }
-    table_bytes = sum(per_version.values())
-    late_versions = sorted(per_version)[-3:]
-    for v in late_versions:
-        assert per_version[v] < table_bytes / 2, (v, per_version, table_bytes)
 
-    # e2e equivalence on this universe: same seen set as the oracle
-    o = CrawlOracle(
+    def base_dirs():
+        if not os.path.isdir(fdir):
+            return {}
+        return {e: _du(os.path.join(fdir, e)) for e in os.listdir(fdir) if e.startswith("v=")}
+
+    records = []
+    for k in range(n_epochs):
+        before_dirs, n_calls = base_dirs(), len(cat.parts_calls)
+        ptable_before = cat.ptable_meta("frontier")
+        st = eng.run(seeds if k == 0 else None, max_epochs=1).epochs[-1]
+        assert st.epoch == k
+        fold = eng._frontier_fold()
+        rec = {
+            "stats": st,
+            "folded": fold["folded_through"] == k,
+            "parts_staged": cat.parts_calls[n_calls:],
+            "ptable_before": ptable_before,
+            "ptable_after": cat.ptable_meta("frontier"),
+            "base_written": sum(
+                b for d, b in base_dirs().items() if d not in before_dirs
+            ),
+            "live": _frontier_bytes(cat, fold["log"]),
+            "footer_rows": eng._frontier_rows(),
+            "merged_rows": eng._frontier().count(),
+        }
+        if not rec["folded"]:
+            rec["written"] = {
+                t: _du(os.path.join(root, t, f"e={k}")) for t in ("admitted", "retries")
+            }
+        records.append(rec)
+        if k in copies:
+            shutil.copytree(root, f"{root}_at{k}")
+    return eng, records
+
+
+def _wide_oracle(uni, cfg, n_epochs):
+    return CrawlOracle(
         uni.pages,
         uni.robots,
         uni.politeness,
@@ -192,10 +222,162 @@ def test_epoch_writes_are_delta_not_full_state(spark, tmp_path, seen_filter):
         comments_per_page=cfg.comments_per_page,
         max_comments_per_note=cfg.max_comments_per_note,
         epoch_ts=cfg.epoch_ts,
+    ).run(uni.seeds, max_epochs=n_epochs)
+
+
+def _crawl_state(eng) -> dict:
+    """Comparable crawl state: seen set, per-host fetch order (the
+    oracle's shape), document spans and the frontier's rows."""
+    order: dict[str, list] = {}
+    for r in eng.fetch_log().orderBy("host", "epoch", "host_rank").collect():
+        order.setdefault(r["host"], []).append((r["url"], r["epoch"], r["kind"]))
+    return {
+        "epoch": eng.catalog.committed_epoch(),
+        "seen": {r["url"] for r in eng.catalog.read("seen").collect()},
+        "order": order,
+        "docs": {
+            r["doc_id"]: [
+                (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
+            ]
+            for r in eng.documents().collect()
+        },
+        "frontier": sorted(tuple(r) for r in eng._frontier().select(*FRONTIER_COLS).collect()),
+    }
+
+
+@pytest.fixture(scope="session")
+def wide_universe():
+    return build_universe(_WIDE)
+
+
+@pytest.fixture(scope="session")
+def wide_crawl(spark, wide_universe, tmp_path_factory):
+    """ONE wide-frontier crawl per filter kind, made on first use and
+    shared by the tests below (the delta-write, footer-count, resume and
+    P-growth checks all read the same run instead of each crawling the
+    universe again)."""
+    crawls: dict[str, dict] = {}
+
+    def get(kind: str) -> dict:
+        if kind not in crawls:
+            root = str(tmp_path_factory.mktemp(f"wide_{kind}") / "cat")
+            eng, records = crawl_wide(
+                spark, wide_universe, root, kind, copies=_WIDE_COPIES
+            )
+            crawls[kind] = {"eng": eng, "records": records, "root": root}
+        return crawls[kind]
+
+    return get
+
+
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_epoch_writes_are_delta_not_full_state(wide_crawl, wide_universe, seen_filter):
+    """The 'done' criterion, for an epoch delta larger than P: between
+    folds an epoch stages no frontier leaf and writes no frontier base
+    bytes — the frontier bytes it writes are its retries increment, so
+    they never exceed its admitted + retries increments, and stay under
+    half the live frontier's bytes (base + logs). Only the
+    maintenance fold (epoch 7) rewrites the base, once, in full. The
+    crawl's seen set and per-host fetch order equal the oracle's."""
+    crawl = wide_crawl(seen_filter)
+    recs = crawl["records"]
+    assert [r["folded"] for r in recs] == [k % 8 == 7 for k in range(_WIDE_EPOCHS)]
+    between = [r for r in recs if not r["folded"]]
+    assert any(
+        r["stats"].admitted + r["stats"].fetched > _WIDE_P for r in between[1:]
+    ), "some epoch between folds must carry a delta wider than P"
+    for r in between:
+        e = r["stats"].epoch
+        assert "frontier" not in r["parts_staged"], (e, r["parts_staged"])
+        assert r["ptable_after"] == r["ptable_before"], e
+        assert r["base_written"] == 0, (e, r["base_written"])
+        frontier_written = r["base_written"] + r["written"]["retries"]
+        assert frontier_written <= r["written"]["admitted"] + r["written"]["retries"]
+        # and a small fraction of the live frontier (the old partitioned
+        # rewrite wrote ~all of it every epoch)
+        assert frontier_written < r["live"] / 2, (e, frontier_written, r["live"])
+    fold = recs[7]
+    assert fold["parts_staged"].count("frontier") == 1
+    ent = fold["ptable_after"]
+    assert ent["n"] == _WIDE_P and len(set(ent["parts"].values())) == 1
+    assert fold["base_written"] > 0
+    # the fold pruned every folded increment; the log restarts after it
+    cat = crawl["eng"].catalog
+    for t in _LOGS:
+        assert sorted(int(x) for x in cat._appends[t]) == list(range(8, _WIDE_EPOCHS)), t
+    assert cat.fsck() == []
+
+    want = _wide_oracle(wide_universe, _wide_cfg(), _WIDE_EPOCHS)
+    got = _crawl_state(crawl["eng"])
+    assert got["seen"] == want.seen
+    assert got["order"] == want.fetch_order
+    assert got["frontier"], "the frontier must outlive the crawl window"
+
+
+def test_frontier_footer_count_equals_merged_read(wide_crawl):
+    """The drain check's footer count — rows(base) + Σadmitted +
+    Σretries − Σfetched, no Spark job — equals the merged read's row
+    count at every epoch, fold included."""
+    counts = [(r["footer_rows"], r["merged_rows"]) for r in wide_crawl("bloom")["records"]]
+    assert all(f == m for f, m in counts), counts
+    assert all(m > 0 for _, m in counts[1:]), counts
+
+
+def test_resume_mid_cycle_matches_uninterrupted(spark, wide_crawl, wide_universe):
+    """Fresh engine and catalog objects resumed from the epoch-4 snapshot
+    (log [0..4], no base yet) run through the epoch-7 fold to the same
+    end state as the uninterrupted crawl: seen set, fetch order, spans
+    and the frontier's rows."""
+    import shutil
+
+    crawl = wide_crawl("bloom")
+    root = crawl["root"] + "_resume"
+    shutil.copytree(crawl["root"] + "_at4", root)
+    cat = SnapshotCatalog(spark, root)
+    assert cat.meta()["frontier"] == {"folded_through": -1, "log": [0, 1, 2, 3, 4]}
+    eng = CrawlEngine(
+        spark,
+        cat,
+        spark.createDataFrame(wide_universe.pages, PAGES_SCHEMA),
+        spark.createDataFrame(wide_universe.robots, ROBOTS_SCHEMA),
+        spark.createDataFrame(wide_universe.politeness, POLITENESS_SCHEMA),
+        _wide_cfg(),
     )
-    ores = o.run(uni.seeds, max_epochs=6)
-    got = {r["url"] for r in cat.read("seen").collect()}
-    assert got == ores.seen
+    eng.run(None, max_epochs=_WIDE_EPOCHS - 5)
+    assert _crawl_state(eng) == _crawl_state(crawl["eng"])
+    assert cat.fsck() == []
+
+
+def test_missing_log_increment_raises(spark, wide_crawl, wide_universe):
+    """A log increment gone between the fold and the head (pruned by
+    another maintenance pass, whether or not expiry has deleted its dir
+    yet) makes the frontier read raise — it never silently shrinks the
+    frontier."""
+    import shutil
+
+    crawl = wide_crawl("bloom")
+    root = crawl["root"] + "_pruned"
+    shutil.copytree(crawl["root"] + "_at4", root)
+    cat = SnapshotCatalog(spark, root)
+    assert cat.prune_appends("admitted", min_epoch=2) == 2
+    assert os.path.isdir(os.path.join(root, "admitted", "e=0"))  # not expired yet
+    eng = CrawlEngine(
+        spark,
+        cat,
+        spark.createDataFrame(wide_universe.pages, PAGES_SCHEMA),
+        spark.createDataFrame(wide_universe.robots, ROBOTS_SCHEMA),
+        spark.createDataFrame(wide_universe.politeness, POLITENESS_SCHEMA),
+        _wide_cfg(),
+    )
+    with pytest.raises(LookupError, match=r"increments \[0, 1\] of 'admitted'"):
+        eng._frontier()
+    with pytest.raises(LookupError, match="not pinned"):
+        eng.run(None, max_epochs=1)
+    assert cat.committed_epoch() == 4
+    cat.expire_versions(keep_last=1)
+    assert not os.path.isdir(os.path.join(root, "admitted", "e=0"))
+    with pytest.raises(LookupError, match="not pinned"):
+        eng._frontier()
 
 
 from hypothesis import given, settings
@@ -303,93 +485,45 @@ def test_ptable_state_machine_matches_dict_model(spark, tmp_path_factory, ops):
     assert cat.fsck() == []
 
 
-def test_frontier_grows_partition_count_mid_crawl(spark, tmp_path):
-    """VERDICT r03 #4: a P=32 catalog doubles to P=64 mid-crawl via the
-    maintenance grow op. After the same number of epochs, the grown run's
-    seen set, fetch log, and frontier are IDENTICAL to a control run that
-    never re-partitioned (growth is pure layout), and at least one
-    post-growth epoch is a partial (O(dirty)) rewrite under the new
-    layout. Wide-frontier universe (240 notes, budget 2) so the frontier
-    outlives the cut."""
-    from dataclasses import replace as dc_replace
+def test_frontier_grows_partition_count_mid_crawl(spark, wide_crawl, wide_universe):
+    """VERDICT r03 #4: P doubles at a fold. From the epoch-8 snapshot of
+    the wide crawl (base P = 8 from the epoch-7 fold, log [8]), a fold
+    under a 1-byte partition threshold rewrites the merged frontier once
+    as a P = 16 base (every leaf one version, same rows, empty log), and
+    the crawl resumed on the grown layout reaches the IDENTICAL state as
+    the never-grown crawl after the same epochs (growth is pure
+    layout)."""
+    import shutil
 
-    uni = build_universe(
-        UniverseParams(
-            n_notes=240,
-            n_hosts=3,
-            n_singleton_hosts=0,
-            n_keywords=1,
-            search_pages_per_keyword=1,
-            max_comments_per_note=10,
-            budget_hot=2,
-            budget_warm=2,
-        )
-    )
-    cfg = EngineConfig(
-        default_budget=2,
-        max_comments_per_note=10,
-        max_epochs=200,
-        frontier_partitions=32,
-        frontier_max_part_bytes=1,  # any non-empty partition triggers growth
-    )
-    pages = spark.createDataFrame(uni.pages, PAGES_SCHEMA)
-    robots = spark.createDataFrame(uni.robots, ROBOTS_SCHEMA)
-    politeness = spark.createDataFrame(uni.politeness, POLITENESS_SCHEMA)
-    seeds = spark.createDataFrame(uni.seeds, SEEDS_SCHEMA)
+    crawl = wide_crawl("bloom")
+    root = crawl["root"] + "_grow"
+    shutil.copytree(crawl["root"] + "_at8", root)
+    pages = spark.createDataFrame(wide_universe.pages, PAGES_SCHEMA)
+    robots = spark.createDataFrame(wide_universe.robots, ROBOTS_SCHEMA)
+    politeness = spark.createDataFrame(wide_universe.politeness, POLITENESS_SCHEMA)
 
-    root = str(tmp_path / "snap_grow")
     cat = SnapshotCatalog(spark, root)
-    eng = CrawlEngine(spark, cat, pages, robots, politeness, cfg)
-    eng.run(seeds, max_epochs=3)
-    assert cat.ptable_meta("frontier")["n"] == 32
-    assert cat.ptable_rows("frontier") > 0, "frontier must outlive the cut"
-    assert eng._maybe_grow_frontier() is True
+    assert cat.ptable_meta("frontier")["n"] == _WIDE_P
+    eng = CrawlEngine(
+        spark, cat, pages, robots, politeness, _wide_cfg(frontier_max_part_bytes=1)
+    )
+    before = sorted(tuple(r) for r in eng._frontier().select(*FRONTIER_COLS).collect())
+    assert before, "frontier must outlive the cut"
+    eng._fold_frontier(cat.committed_epoch())
     ent = cat.ptable_meta("frontier")
-    assert ent["n"] == 64
-    assert len(set(ent["parts"].values())) == 1  # full-dirty rewrite
+    assert ent["n"] == 2 * _WIDE_P
+    assert len(set(ent["parts"].values())) == 1  # one full rewrite
+    assert eng._frontier_fold() == {"folded_through": 8, "log": []}
+    assert all(cat._appends[t] == [] for t in _LOGS)
+    after = sorted(tuple(r) for r in eng._frontier().select(*FRONTIER_COLS).collect())
+    assert after == before
+    assert cat.ptable_rows("frontier") == len(before)
 
     # resume on the grown layout with fresh objects and a sane threshold
-    # (no further growth), stepping epochs and watching the pin map: at
-    # least one post-growth epoch must keep some leaves' old pins while
-    # repinning others — the O(dirty) partial rewrite under the new P
-    cfg2 = dc_replace(cfg, frontier_max_part_bytes=256 << 20)
+    # (no further growth) for the epochs the shared crawl ran after 8
     cat2 = SnapshotCatalog(spark, root)
-    eng2 = CrawlEngine(spark, cat2, pages, robots, politeness, cfg2)
-    prev = dict(cat2.ptable_meta("frontier")["parts"])
-    saw_partial = False
-    extra_epochs = 6
-    for _ in range(extra_epochs):
-        eng2.run(None, max_epochs=1)
-        cur = dict(cat2.ptable_meta("frontier")["parts"])
-        kept = [k for k, v in cur.items() if prev.get(k) == v]
-        changed = [k for k, v in cur.items() if prev.get(k) != v]
-        if kept and changed:
-            saw_partial = True
-        prev = cur
-    assert saw_partial, "no post-growth epoch did a partial rewrite"
-
-    # control: identical crawl, P=32 throughout, same total epoch count —
-    # growth must be invisible in every piece of crawl state
-    root_c = str(tmp_path / "snap_grow_ctl")
-    cat_c = SnapshotCatalog(spark, root_c)
-    eng_c = CrawlEngine(spark, cat_c, pages, robots, politeness, cfg2)
-    eng_c.run(seeds, max_epochs=3 + extra_epochs)
-    assert cat_c.ptable_meta("frontier")["n"] == 32
-
-    def state(cat_x, eng_x):
-        seen = frozenset(r["url"] for r in cat_x.read("seen").collect())
-        log = tuple(
-            (r["host"], r["url"], r["epoch"], r["host_rank"])
-            for r in eng_x.fetch_log()
-            .orderBy("host", "epoch", "host_rank")
-            .collect()
-        )
-        fr = frozenset(
-            (r["url_hash"], r["not_before_epoch"])
-            for r in (cat_x.read("frontier") or spark.range(0).selectExpr(
-                "id as url_hash", "id as not_before_epoch")).collect()
-        )
-        return seen, log, fr
-
-    assert state(cat2, eng2) == state(cat_c, eng_c)
+    eng2 = CrawlEngine(spark, cat2, pages, robots, politeness, _wide_cfg())
+    eng2.run(None, max_epochs=_WIDE_EPOCHS - 9)
+    assert cat2.ptable_meta("frontier")["n"] == 2 * _WIDE_P
+    assert _crawl_state(eng2) == _crawl_state(crawl["eng"])
     assert cat2.fsck() == []

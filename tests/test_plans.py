@@ -89,9 +89,10 @@ def test_epoch_job_count_bounded_and_flat(spark, udfs, tmp_path):
     10^4-epoch design point: the number of Spark jobs one epoch issues
     must be BOUNDED and must not grow with the epoch index (a lazy-plan
     leak or a per-epoch re-scan of history shows up here first).
-    Measured 31-37 jobs/epoch on this universe (writes, persist,
-    dirty-part collect, footer-free counts and schema-pinned snapshot
-    reads keep it flat); the bound keeps the 13-job slack above that."""
+    Measured 27-37 jobs/epoch on this universe (writes, persist,
+    filter-shard collect, footer-free counts and schema-pinned snapshot
+    reads keep it flat; the merge-on-read frontier only appends between
+    folds); the bound keeps the 13-job slack above that."""
     import tempfile
 
     from mediacrawler_spark.plans.epoch import CrawlEngine, EngineConfig

@@ -1,38 +1,64 @@
-"""Pre-ptable snapshot migration (ADVICE r03 medium).
+"""Resuming snapshots written before the current frontier layout.
 
-Rounds ≤2 committed ``frontier`` and ``bloom`` as FULL replace tables
-(``tables`` pins); the partitioned layout reads only ``ptables`` pins.
-Resuming an old-format snapshot must fold the legacy tables into the
-partitioned layout BEFORE the first epoch — otherwise committed deferred
-frontier rows vanish (read_parts → None) and clean bloom shards are
-dropped (stage_parts base=None), re-admitting already-seen URLs through
-the definitely-new fast path.
+Pre-ptable (ADVICE r03 medium): rounds ≤2 committed ``frontier`` and
+``bloom`` as FULL replace tables (``tables`` pins); the partitioned layout
+reads only ``ptables`` pins. Resuming an old-format snapshot must fold the
+legacy tables into the partitioned layout BEFORE the first epoch —
+otherwise clean bloom shards are dropped (stage_parts base=None),
+re-admitting already-seen URLs through the definitely-new fast path.
+
+Pre-merge-on-read: the frontier ptable alone was the full frontier, and
+the ``admitted``/``fetched`` increments of the last epochs stayed pinned
+beside it. Such a snapshot has no fold meta; it counts as folded through
+its head, so those retained increments must never be applied again.
 """
 
 import json
 import os
 
+from pyspark.sql import functions as F
+
 from mediacrawler_spark.plans.epoch import CrawlEngine
 from mediacrawler_spark.sinks.snapshot import SnapshotCatalog
 
 
-def _forge_legacy(spark, root: str) -> None:
-    """Rewrite a new-format snapshot into the pre-ptable format: full
-    ``v=<n>`` dirs for frontier/bloom + a commit record that pins them in
-    ``tables`` and carries no ptable entries — byte-level what a round-2
-    engine would have committed."""
+def _engine(spark, udfs, cfg, cat):
+    return CrawlEngine(spark, cat, udfs["pages"], udfs["robots"], udfs["politeness"], cfg)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _append_pre_change_record(root: str, rec: dict) -> None:
+    """Commit ``rec`` as a snapshot written before merge-on-read: no fold
+    meta and no ``retries`` log (admitted/fetched pins stay retained)."""
+    rec["meta"].pop("frontier")
+    rec["appends"].pop("retries")
+    with open(os.path.join(root, "_commits.jsonl"), "a") as f:
+        f.write(json.dumps(rec) + "\n")
+
+
+def _forge_legacy(spark, udfs, cfg, root: str) -> list:
+    """Rewrite a new-format snapshot into the pre-ptable format: the
+    merged frontier and the bloom as full ``v=<n>`` dirs, pinned in
+    ``tables`` by a commit record that carries no ptable entries, no fold
+    meta and no retries pins — byte-level what a round-2 engine would
+    have committed. Returns the frontier's rows."""
     cat = SnapshotCatalog(spark, root)
-    assert cat.ptable_rows("frontier") > 0, "cut point must leave deferred rows"
+    frontier = _engine(spark, udfs, cfg, cat)._frontier()
+    want = _rows(frontier)
+    assert want, "cut point must leave deferred rows"
     assert cat.ptable_rows("bloom") > 0
-    cat.read("frontier").write.parquet(os.path.join(root, "frontier", "v=900"))
+    frontier.write.parquet(os.path.join(root, "frontier", "v=900"))
     cat.read("bloom").write.parquet(os.path.join(root, "bloom", "v=900"))
     rec = cat.last_commit()
     rec["tables"]["frontier"] = 900
     rec["tables"]["bloom"] = 900
-    rec["ptables"].pop("frontier")
+    rec["ptables"].pop("frontier", None)
     rec["ptables"].pop("bloom")
-    with open(os.path.join(root, "_commits.jsonl"), "a") as f:
-        f.write(json.dumps(rec) + "\n")
+    _append_pre_change_record(root, rec)
+    return want
 
 
 def test_resume_from_legacy_snapshot_matches_reference(
@@ -48,14 +74,12 @@ def test_resume_from_legacy_snapshot_matches_reference(
 
     root = str(tmp_path / "snap_legacy")
     shutil.copytree(partial_crawl["root"], root)
-    _forge_legacy(spark, root)
+    _forge_legacy(spark, udfs, crawl_cfg, root)
 
     cat2 = SnapshotCatalog(spark, root)
     assert cat2.legacy_version("frontier") == 900  # really old-format now
     assert cat2.legacy_version("bloom") == 900
-    eng2 = CrawlEngine(
-        spark, cat2, udfs["pages"], udfs["robots"], udfs["politeness"], crawl_cfg
-    )
+    eng2 = _engine(spark, udfs, crawl_cfg, cat2)
     eng2.run(None, max_epochs=2)
 
     # migration folded both tables into the partitioned layout
@@ -68,4 +92,47 @@ def test_resume_from_legacy_snapshot_matches_reference(
     # the forged v=900 dirs are unpinned after expiry and fsck stays clean
     cat2.expire_versions(keep_last=1)
     assert not os.path.isdir(os.path.join(root, "frontier", "v=900"))
+    assert cat2.fsck() == []
+
+
+def test_resume_from_pre_merge_on_read_snapshot_applies_nothing_twice(
+    spark, udfs, crawl_cfg, partial_crawl, mid_crawl_ref, snapshot_state, tmp_path
+):
+    """Resume over a forged pre-merge-on-read snapshot: the frontier
+    ptable holds the full frontier, the epoch-0/1 admitted and fetched
+    increments are still pinned, and there is no fold meta. The frontier
+    read is the ptable alone (the retained admitted rows are not added
+    again, the fetched rows delete nothing more), and two resumed epochs
+    land in the reference state."""
+    import shutil
+
+    root = str(tmp_path / "snap_pre_mor")
+    shutil.copytree(partial_crawl["root"], root)
+    cat = SnapshotCatalog(spark, root)
+    frontier = _engine(spark, udfs, crawl_cfg, cat)._frontier()
+    want = _rows(frontier)
+    assert want, "cut point must leave deferred rows"
+    p = crawl_cfg.frontier_partitions
+    cat.stage_parts(
+        frontier.withColumn("_part", F.pmod(F.col("url_hash"), F.lit(p)).cast("int")),
+        "frontier",
+        p,
+        list(range(p)),
+    )
+    cat.commit(cat.committed_epoch())
+    _append_pre_change_record(root, cat.last_commit())
+
+    cat2 = SnapshotCatalog(spark, root)
+    assert "frontier" not in cat2.meta()
+    assert [str(x) for x in cat2._appends["admitted"]] == ["0", "1"]
+    assert [str(x) for x in cat2._appends["fetched"]] == ["0", "1"]
+    assert cat2.read("admitted").count() > 0
+    eng2 = _engine(spark, udfs, crawl_cfg, cat2)
+    assert eng2._frontier_fold() == {"folded_through": 1, "log": []}
+    assert _rows(eng2._frontier()) == want
+    assert eng2._frontier_rows() == len(want)
+
+    eng2.run(None, max_epochs=2)
+    assert cat2.meta()["frontier"] == {"folded_through": 1, "log": [2, 3]}
+    assert snapshot_state(eng2) == mid_crawl_ref
     assert cat2.fsck() == []
