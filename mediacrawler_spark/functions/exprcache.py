@@ -9,7 +9,11 @@ emission, the URL canonicalizer) every epoch; building each list once
 per session removes that chatter without changing a single plan.
 
 Cached per SparkSession (weakly) so a stopped/restarted session can
-never serve stale JVM object handles.
+never serve stale JVM object handles. The active session is a
+thread-local in PySpark: a thread-pool worker (the epoch loop's
+overlapped writes) has none, so the lookup falls back to the driver's
+default session — otherwise every tree would be rebuilt, uncached, in
+every worker.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ from __future__ import annotations
 import weakref
 from typing import Any, Callable
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 _CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
@@ -26,11 +31,13 @@ def cached_exprs(builder: Callable[..., Any], *key) -> Any:
     """Return ``builder(*key)``, memoized per (active SparkSession,
     builder name, key). ``key`` must be hashable plan-shaping parameters
     (ints/strings) — never data."""
-    sess = SparkSession.getActiveSession()
-    if sess is None:  # no session yet (import time): don't cache
+    try:
+        sess = SparkSession.active()  # the thread's session, else the default
+    except PySparkRuntimeError:  # no session yet (import time): don't cache
         return builder(*key)
     per = _CACHE.setdefault(sess, {})
     k = (builder.__module__, builder.__qualname__, *key)
     if k not in per:
-        per[k] = builder(*key)
+        # two threads may both build; the first stored tree wins for both
+        per.setdefault(k, builder(*key))
     return per[k]

@@ -54,92 +54,96 @@ def _doc_id(platform, note_id):
     return F.concat(platform, F.lit(":note:"), note_id)
 
 
-def _span_exprs(comments_per_page: int, max_comments_per_note: int) -> dict:
-    """All static Column trees of :func:`extract_span_rows`, built once
-    per session (see functions/exprcache.py — per-epoch re-construction
-    of these lists dominated the epoch loop's py4j round-trips)."""
-    zero = F.lit(0).cast("long")
-    d: dict = {}
-    d["detail_filter"] = (F.col("kind") == "detail") & (F.size("items") > 0)
-    d["detail_it"] = F.try_element_at(F.col("items"), F.lit(1))
-    d["detail_sel"] = [
-        _doc_id(F.col("platform"), F.col("note_id")).alias("doc_id"),
-        F.col("it.title").alias("title"),
-        F.col("it.text").alias("text"),
-        F.col("it.image_refs").alias("image_refs"),
-        F.col("it.video_ref").alias("video_ref"),
-    ]
-    d["title_sel"] = [
-        "doc_id", F.lit(0).alias("s_sec"), zero.alias("s_page"),
-        F.lit(0).alias("s_phase"), zero.alias("s_parent"), zero.alias("s_subpage"),
-        zero.alias("s_idx"), F.lit("title").alias("kind"),
-        F.col("title").alias("text"), F.lit("").alias("media_ref"),
-    ]
-    d["body_sel"] = [
-        "doc_id", F.lit(1).alias("s_sec"), zero.alias("s_page"),
-        F.lit(0).alias("s_phase"), zero.alias("s_parent"), zero.alias("s_subpage"),
-        zero.alias("s_idx"), F.lit("text").alias("kind"),
-        F.col("text"), F.lit("").alias("media_ref"),
-    ]
-    d["images_pos"] = ["doc_id", F.posexplode(F.col("image_refs")).alias("pos", "ref")]
-    d["images_sel"] = [
-        "doc_id", F.lit(2).alias("s_sec"), zero.alias("s_page"),
-        F.lit(0).alias("s_phase"), zero.alias("s_parent"), zero.alias("s_subpage"),
-        F.col("pos").cast("long").alias("s_idx"), F.lit("image").alias("kind"),
-        F.lit("").alias("text"), F.col("ref").alias("media_ref"),
-    ]
-    d["video_filter"] = F.col("video_ref") != ""
-    d["video_sel"] = [
-        "doc_id", F.lit(3).alias("s_sec"), zero.alias("s_page"),
-        F.lit(0).alias("s_phase"), zero.alias("s_parent"), zero.alias("s_subpage"),
-        zero.alias("s_idx"), F.lit("video").alias("kind"),
-        F.lit("").alias("text"), F.col("video_ref").alias("media_ref"),
-    ]
-    d["listing_filter"] = F.col("kind") == "listing"
-    d["listing_sel"] = [
-        F.col("platform"),
-        F.col("note_id").alias("uid"),
-        F.explode(F.col("items")).alias("it"),
-    ]
-    d["profile_filter"] = F.col("it.model_type") == "creator_profile"
-    d["profile_sel"] = [
-        F.concat(F.col("platform"), F.lit(":creator:"), F.col("uid")).alias("doc_id"),
-        F.col("it.title").alias("title"),
-        F.col("it.text").alias("text"),
-    ]
-    d["cpage_filter"] = F.col("kind") == "comment_page"
-    d["roots_sel"] = [
-        _doc_id(F.col("platform"), F.col("note_id")).alias("doc_id"),
-        F.col("seq").alias("page"),
-        F.posexplode(F.col("comments")).alias("idx", "c"),
-    ]
-    d["roots_budget"] = (
-        F.col("page") * comments_per_page + F.col("idx") < max_comments_per_note
+def _span(doc_id, sec, page, phase, parent, subpage, idx, kind, text, media_ref):
+    """One span row as a struct, fields in ``SPAN_ROW_COLS`` order."""
+    return F.struct(
+        doc_id.alias("doc_id"), F.lit(sec).alias("s_sec"), page.alias("s_page"),
+        F.lit(phase).alias("s_phase"), parent.alias("s_parent"),
+        subpage.alias("s_subpage"), idx.alias("s_idx"), F.lit(kind).alias("kind"),
+        text.alias("text"), media_ref.alias("media_ref"),
     )
-    d["roots_out"] = [
-        "doc_id", F.lit(4).alias("s_sec"), F.col("page").alias("s_page"),
-        F.lit(0).alias("s_phase"),
-        (F.col("page") * comments_per_page + F.col("idx")).cast("long").alias("s_parent"),
-        zero.alias("s_subpage"), zero.alias("s_idx"),
-        F.lit("comment").alias("kind"),
-        F.col("c.content").alias("text"), F.lit("").alias("media_ref"),
+
+
+def _span_exprs(comments_per_page: int, max_comments_per_note: int):
+    """The generator column of :func:`extract_span_rows`, built once per
+    session (see functions/exprcache.py — per-epoch re-construction of
+    these trees dominated the epoch loop's py4j round-trips).
+
+    Every row kind contributes one array branch; ``concat`` joins them
+    and ``inline`` turns the array into rows, so ``successes`` is scanned
+    once. A branch that does not apply to a row is NULL, and ``concat``
+    of a NULL is NULL, so each branch is coalesced to an empty array of
+    the span type — non-null fields, so the output nullability stays the
+    OR over the branches, as a union's would."""
+    zero = F.lit(0).cast("long")
+    none = F.array().cast(T.ArrayType(SPAN_ROWS_SCHEMA, containsNull=False))
+    kind = F.col("kind")
+    note_doc = _doc_id(F.col("platform"), F.col("note_id"))
+
+    # --- note detail: title, text, images, video ---------------------------
+    detail = (kind == "detail") & (F.size("items") > 0)
+    it = F.try_element_at(F.col("items"), F.lit(1))
+    heads = F.array(
+        _span(note_doc, 0, zero, 0, zero, zero, zero, "title", it["title"], F.lit("")),
+        _span(note_doc, 1, zero, 0, zero, zero, zero, "text", it["text"], F.lit("")),
+    )
+    images = F.transform(
+        it["image_refs"],
+        lambda ref, pos: _span(
+            note_doc, 2, zero, 0, zero, zero, pos.cast("long"), "image", F.lit(""), ref
+        ),
+    )
+    video = F.array(
+        _span(note_doc, 3, zero, 0, zero, zero, zero, "video", F.lit(""), it["video_ref"])
+    )
+
+    # --- creator profile (first listing page carries a profile item) --------
+    listing = kind == "listing"
+    profiles = F.filter(F.col("items"), lambda x: x["model_type"] == "creator_profile")
+    creator_doc = F.concat(F.col("platform"), F.lit(":creator:"), F.col("note_id"))
+    p_title = F.transform(
+        profiles,
+        lambda x: _span(creator_doc, 0, zero, 0, zero, zero, zero, "title", x["title"], F.lit("")),
+    )
+    p_body = F.transform(
+        profiles,
+        lambda x: _span(creator_doc, 1, zero, 0, zero, zero, zero, "text", x["text"], F.lit("")),
+    )
+
+    # --- root comments (comment pages), W4 truncation -----------------------
+    roots = F.filter(
+        F.transform(
+            F.col("comments"),
+            lambda c, idx: _span(
+                note_doc, 4, F.col("seq"), 0,
+                (F.col("seq") * comments_per_page + idx).cast("long"), zero, zero,
+                "comment", c["content"], F.lit(""),
+            ),
+        ),
+        lambda s: s["s_parent"] < max_comments_per_note,
+    )
+
+    # --- sub comments: sort after their parent's page ------------------------
+    subs = F.transform(
+        F.col("comments"),
+        lambda c, idx: _span(
+            note_doc, 4, (F.col("parent_seq") / comments_per_page).cast("long"), 1,
+            F.col("parent_seq"), F.col("seq"), idx.cast("long"),
+            "comment", c["content"], F.lit(""),
+        ),
+    )
+
+    branches = [
+        (detail, heads),
+        (detail, images),
+        (detail & (it["video_ref"] != ""), video),
+        (listing, p_title),
+        (listing, p_body),
+        (kind == "comment_page", roots),
+        (kind == "sub_comment_page", subs),
     ]
-    d["spage_filter"] = F.col("kind") == "sub_comment_page"
-    d["subs_sel"] = [
-        _doc_id(F.col("platform"), F.col("note_id")).alias("doc_id"),
-        (F.col("parent_seq") / comments_per_page).cast("long").alias("s_page"),
-        F.col("parent_seq").alias("s_parent"),
-        F.col("seq").alias("s_subpage"),
-        F.posexplode(F.col("comments")).alias("idx", "c"),
-    ]
-    d["subs_out"] = [
-        "doc_id", F.lit(4).alias("s_sec"), F.col("s_page"),
-        F.lit(1).alias("s_phase"), F.col("s_parent"), F.col("s_subpage"),
-        F.col("idx").cast("long").alias("s_idx"),
-        F.lit("comment").alias("kind"),
-        F.col("c.content").alias("text"), F.lit("").alias("media_ref"),
-    ]
-    return d
+    spans = F.concat(*[F.coalesce(F.when(cond, arr), none) for cond, arr in branches])
+    return F.inline(spans)
 
 
 def extract_span_rows(
@@ -147,51 +151,11 @@ def extract_span_rows(
     comments_per_page: int = 10,
     max_comments_per_note: int = 500,
 ) -> DataFrame:
-    """Successful fetches of one epoch → span rows (pure expr + explode)."""
+    """Successful fetches of one epoch → span rows: one projection and
+    one ``inline`` over ``successes`` (no union, one scan)."""
     from mediacrawler_spark.functions.exprcache import cached_exprs
 
-    d = cached_exprs(_span_exprs, comments_per_page, max_comments_per_note)
-
-    # --- note detail: title, text, images, video ---------------------------
-    detail = (
-        successes.filter(d["detail_filter"])
-        .withColumn("it", d["detail_it"])
-        .select(*d["detail_sel"])
-    )
-    title = detail.select(*d["title_sel"])
-    body = detail.select(*d["body_sel"])
-    images = detail.select(*d["images_pos"]).select(*d["images_sel"])
-    video = detail.filter(d["video_filter"]).select(*d["video_sel"])
-
-    # --- creator profile (first listing page carries a profile item) --------
-    profile = (
-        successes.filter(d["listing_filter"])
-        .select(*d["listing_sel"])
-        .filter(d["profile_filter"])
-        .select(*d["profile_sel"])
-    )
-    p_title = profile.select(*d["title_sel"])
-    p_body = profile.select(*d["body_sel"])
-
-    # --- root comments (comment pages), W4 truncation -----------------------
-    roots = (
-        successes.filter(d["cpage_filter"])
-        .select(*d["roots_sel"])
-        .filter(d["roots_budget"])
-        .select(*d["roots_out"])
-    )
-
-    # --- sub comments: sort after their parent's page ------------------------
-    subs = (
-        successes.filter(d["spage_filter"])
-        .select(*d["subs_sel"])
-        .select(*d["subs_out"])
-    )
-
-    out = title
-    for part in (body, images, video, p_title, p_body, roots, subs):
-        out = out.unionByName(part)
-    return out.select(*SPAN_ROW_COLS)
+    return successes.select(cached_exprs(_span_exprs, comments_per_page, max_comments_per_note))
 
 
 def assemble_documents(span_rows: DataFrame) -> DataFrame:

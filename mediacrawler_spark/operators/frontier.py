@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mediacrawler_spark.functions.urls import host_of, infer_kind, with_canonical_url
 from mediacrawler_spark.schemas import FRONTIER_SCHEMA
@@ -118,194 +119,166 @@ def classify_outcomes(fetched: DataFrame, epoch: int) -> dict[str, DataFrame]:
     }
 
 
+# a successor before its url-derived columns (url_hash, host) are attached
+_SUCCESSOR_TYPE = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, False)
+        for f in FRONTIER_SCHEMA.fields
+        if f.name not in ("url_hash", "host")
+    ]
+)
+
+
+def _successor(url, kind, priority, seq, parent_id, cursor, parent_seq=None,
+               empty_streak=None):
+    """One successor row as a struct, fields in ``_SUCCESSOR_TYPE`` order.
+    The epoch flows in through the constant ``_nxt`` column (epoch+1)."""
+    nxt = F.col("_nxt")
+    return F.struct(
+        url.alias("url"),
+        F.col("platform").alias("platform"),
+        kind.alias("kind"),
+        priority.alias("priority"),
+        seq.alias("seq"),
+        parent_id.alias("parent_id"),
+        cursor.alias("cursor"),
+        (F.lit(-1).cast("long") if parent_seq is None else parent_seq).alias("parent_seq"),
+        (F.lit(0) if empty_streak is None else empty_streak).alias("empty_streak"),
+        F.lit(0).alias("attempt"),
+        nxt.alias("not_before_epoch"),
+        nxt.alias("epoch"),
+    )
+
+
 def _successor_exprs(
     comments_per_page: int, max_comments_per_note: int, max_pages_per_chain: int
-) -> dict:
-    """All static Column trees of :func:`emit_successors`, built once per
-    session (functions/exprcache.py). The epoch enters the rows via the
-    constant ``_nxt`` column (epoch+1) the caller attaches, so every tree
-    here is epoch-independent — re-building these lists per epoch was
-    most of the successor stage's py4j round-trips (round-5 profile)."""
-    nxt = F.col("_nxt")
-    base = [
-        F.lit(-1).cast("long").alias("parent_seq"),
-        F.lit(0).alias("empty_streak"),
-        F.lit(0).alias("attempt"),
-        nxt.alias("not_before_epoch"),
-        nxt.alias("epoch"),
-    ]
-    d: dict = {"base": base}
-    d["search_filter"] = F.col("kind") == "search_page"
-    d["items_sel"] = [
-        F.col("host"),
-        F.col("platform"),
-        F.col("_nxt"),
-        F.explode(F.col("items")).alias("it"),
-    ]
-    d["items_filter"] = ~F.col("it.model_type").isin("rec_query", "hot_query")
-    d["details_sel"] = [
-        F.concat(F.lit("https://"), F.col("host"), F.lit("/note/"), F.col("it.id")).alias("url"),
-        F.col("platform"),
-        F.lit("detail").alias("kind"),
-        F.lit(0).alias("priority"),
-        F.lit(0).cast("long").alias("seq"),
-        F.col("it.id").alias("parent_id"),
-        F.lit("").alias("cursor"),
-        *base,
-    ]
-    d["streak"] = F.when(F.size("items") == 0, F.col("empty_streak") + 1).otherwise(F.lit(0))
-    d["next_search_filter"] = (
-        F.col("has_more") & (F.col("_streak") < 2) & (F.col("seq") < max_pages_per_chain)
+) -> tuple:
+    """The generator column and the finishing select list of
+    :func:`emit_successors`, built once per session
+    (functions/exprcache.py). Every tree here is epoch-independent —
+    re-building them per epoch was most of the successor stage's py4j
+    round-trips (round-5 profile).
+
+    Each successor rule is one array branch of one ``concat``, and
+    ``inline`` turns it into rows, so ``successes`` is scanned once. A
+    rule that does not apply to a row is NULL, and ``concat`` of a NULL
+    is NULL, so each branch is coalesced to an empty array of the
+    successor type (non-null fields: the output nullability stays the OR
+    over the branches, as a union's would)."""
+    none = F.array().cast(T.ArrayType(_SUCCESSOR_TYPE, containsNull=False))
+    kind, seq, host = F.col("kind"), F.col("seq"), F.col("host")
+    zero = F.lit(0).cast("long")
+
+    def cursor_next(*path, parent_seq=None):
+        """The next page of this row's own cursor chain."""
+        return _successor(
+            F.concat(F.lit("https://"), host, *path, F.lit("?cursor="), F.col("next_cursor")),
+            kind, F.col("priority"), seq + 1, F.col("parent_id"), F.col("next_cursor"),
+            parent_seq=parent_seq,
+        )
+
+    def detail_of(x):
+        return _successor(
+            F.concat(F.lit("https://"), host, F.lit("/note/"), x["id"]),
+            F.lit("detail"), F.lit(0), zero, x["id"], F.lit(""),
+        )
+
+    # --- search page → detail rows (P1 noise filter) -----------------------
+    search = kind == "search_page"
+    details = F.transform(
+        F.filter(F.col("items"), lambda x: ~x["model_type"].isin("rec_query", "hot_query")),
+        detail_of,
     )
-    d["next_search_sel"] = [
-        F.concat(
-            F.regexp_replace(F.col("url"), r"page=\d+$", "page="),
-            F.col("next_cursor"),
-        ).alias("url"),
-        F.col("platform"),
-        F.col("kind"),
-        F.col("priority"),
-        (F.col("seq") + 1).alias("seq"),
-        F.col("parent_id"),
-        F.col("next_cursor").alias("cursor"),
-        F.lit(-1).cast("long").alias("parent_seq"),
-        F.col("_streak").alias("empty_streak"),
-        F.lit(0).alias("attempt"),
-        nxt.alias("not_before_epoch"),
-        nxt.alias("epoch"),
-    ]
-    d["detail_filter"] = F.col("kind") == "detail"
-    d["detail_it"] = F.try_element_at(F.col("items"), F.lit(1))
-    d["first_cpage_filter"] = F.col("it.comments_count") > 0
-    d["first_cpage_sel"] = [
-        F.concat(
-            F.lit("https://"), F.col("host"), F.lit("/comments/"),
-            F.col("note_id"), F.lit("?cursor=0"),
-        ).alias("url"),
-        F.col("platform"),
-        F.lit("comment_page").alias("kind"),
-        F.lit(1).alias("priority"),  # W1: comment pages after notes
-        F.lit(0).cast("long").alias("seq"),
-        F.col("note_id").alias("parent_id"),
-        F.lit("0").alias("cursor"),
-        *base,
-    ]
-    d["cpage_filter"] = F.col("kind") == "comment_page"
-    d["roots_sel"] = [
-        F.col("host"), F.col("platform"), F.col("note_id"), F.col("seq"),
-        F.col("_nxt"),
-        F.posexplode(F.col("comments")).alias("idx", "c"),
-    ]
-    d["sub_pages_filter"] = F.col("c.sub_comment_count") > 0
-    d["sub_pages_sel"] = [
-        F.concat(
-            F.lit("https://"), F.col("host"), F.lit("/subcomments/"),
-            F.col("note_id"), F.lit("/"), F.col("c.comment_id"),
-            F.lit("?cursor="), F.col("c.sub_comment_cursor"),
-        ).alias("url"),
-        F.col("platform"),
-        F.lit("sub_comment_page").alias("kind"),
-        F.lit(1).alias("priority"),
-        F.lit(0).cast("long").alias("seq"),
-        F.col("c.comment_id").alias("parent_id"),
-        F.col("c.sub_comment_cursor").alias("cursor"),
-        (F.col("seq") * comments_per_page + F.col("idx")).cast("long").alias("parent_seq"),
-        F.lit(0).alias("empty_streak"),
-        F.lit(0).alias("attempt"),
-        nxt.alias("not_before_epoch"),
-        nxt.alias("epoch"),
-    ]
+
+    # --- search page → next page (T4 early exit + 2-strike) ----------------
+    streak = F.when(F.size("items") == 0, F.col("empty_streak") + 1).otherwise(F.lit(0))
+    next_search = F.array(
+        _successor(
+            F.concat(
+                F.regexp_replace(F.col("url"), r"page=\d+$", "page="), F.col("next_cursor")
+            ),
+            kind, F.col("priority"), seq + 1, F.col("parent_id"), F.col("next_cursor"),
+            empty_streak=streak,
+        )
+    )
+    next_search_f = F.col("has_more") & (streak < 2) & (seq < max_pages_per_chain)
+
+    # --- detail → first comment page iff any comments (P3) -----------------
+    first_cpage = F.array(
+        _successor(
+            F.concat(
+                F.lit("https://"), host, F.lit("/comments/"), F.col("note_id"),
+                F.lit("?cursor=0"),
+            ),
+            F.lit("comment_page"),
+            F.lit(1),  # W1: comment pages after notes
+            zero, F.col("note_id"), F.lit("0"),
+        )
+    )
+    first_cpage_f = F.try_element_at(F.col("items"), F.lit(1))["comments_count"] > 0
+
+    # --- comment page → sub-comment pages + next page ----------------------
+    sub_pages = F.transform(
+        F.filter(
+            F.transform(
+                F.col("comments"), lambda c, idx: F.struct(c.alias("c"), idx.alias("idx"))
+            ),
+            lambda r: r["c"]["sub_comment_count"] > 0,
+        ),
+        lambda r: _successor(
+            F.concat(
+                F.lit("https://"), host, F.lit("/subcomments/"), F.col("note_id"),
+                F.lit("/"), r["c"]["comment_id"], F.lit("?cursor="),
+                r["c"]["sub_comment_cursor"],
+            ),
+            F.lit("sub_comment_page"), F.lit(1), zero, r["c"]["comment_id"],
+            r["c"]["sub_comment_cursor"],
+            parent_seq=(seq * comments_per_page + r["idx"]).cast("long"),
+        ),
+    )
     # W4: stop the chain once the next page would start at/after the budget
-    d["next_cpage_filter"] = (
+    next_cpage_f = (
         F.col("has_more")
-        & ((F.col("seq") + 1) * comments_per_page < max_comments_per_note)
-        & (F.col("seq") < max_pages_per_chain)
+        & ((seq + 1) * comments_per_page < max_comments_per_note)
+        & (seq < max_pages_per_chain)
     )
-    d["next_cpage_sel"] = [
-        F.concat(
-            F.lit("https://"), F.col("host"), F.lit("/comments/"),
-            F.col("note_id"), F.lit("?cursor="), F.col("next_cursor"),
-        ).alias("url"),
-        F.col("platform"),
-        F.col("kind"),
-        F.col("priority"),
-        (F.col("seq") + 1).alias("seq"),
-        F.col("parent_id"),
-        F.col("next_cursor").alias("cursor"),
-        *base,
+    next_cpage = F.array(cursor_next(F.lit("/comments/"), F.col("note_id")))
+
+    # --- listing (creator posts) → detail rows + next listing page ----------
+    listing = kind == "listing"
+    l_details = F.transform(
+        F.filter(F.col("items"), lambda x: x["model_type"] == "note"), detail_of
+    )
+    chain_f = F.col("has_more") & (seq < max_pages_per_chain)
+    next_listing = F.array(cursor_next(F.lit("/user/"), F.col("note_id")))
+
+    # --- sub-comment page → next sub page -----------------------------------
+    next_spage = F.array(
+        cursor_next(
+            F.lit("/subcomments/"), F.col("note_id"), F.lit("/"), F.col("parent_id"),
+            parent_seq=F.col("parent_seq"),
+        )
+    )
+
+    cpage, spage = kind == "comment_page", kind == "sub_comment_page"
+    branches = [
+        (search, details),
+        (search & next_search_f, next_search),
+        ((kind == "detail") & first_cpage_f, first_cpage),
+        (cpage, sub_pages),
+        (cpage & next_cpage_f, next_cpage),
+        (spage & chain_f, next_spage),
+        (listing, l_details),
+        (listing & chain_f, next_listing),
     ]
-    d["listing_filter"] = F.col("kind") == "listing"
-    d["l_items_sel"] = [
-        F.col("host"), F.col("platform"), F.col("_nxt"),
-        F.explode(F.col("items")).alias("it"),
-    ]
-    d["l_items_filter"] = F.col("it.model_type") == "note"
-    d["l_details_sel"] = [
-        F.concat(F.lit("https://"), F.col("host"), F.lit("/note/"), F.col("it.id")).alias("url"),
-        F.col("platform"),
-        F.lit("detail").alias("kind"),
-        F.lit(0).alias("priority"),
-        F.lit(0).cast("long").alias("seq"),
-        F.col("it.id").alias("parent_id"),
-        F.lit("").alias("cursor"),
-        *base,
-    ]
-    d["next_listing_filter"] = F.col("has_more") & (F.col("seq") < max_pages_per_chain)
-    d["next_listing_sel"] = [
-        F.concat(
-            F.lit("https://"), F.col("host"), F.lit("/user/"),
-            F.col("note_id"), F.lit("?cursor="), F.col("next_cursor"),
-        ).alias("url"),
-        F.col("platform"),
-        F.col("kind"),
-        F.col("priority"),
-        (F.col("seq") + 1).alias("seq"),
-        F.col("parent_id"),
-        F.col("next_cursor").alias("cursor"),
-        *base,
-    ]
-    d["spage_filter"] = F.col("kind") == "sub_comment_page"
-    d["next_spage_filter"] = F.col("has_more") & (F.col("seq") < max_pages_per_chain)
-    d["next_spage_sel"] = [
-        F.concat(
-            F.lit("https://"), F.col("host"), F.lit("/subcomments/"),
-            F.col("note_id"), F.lit("/"), F.col("parent_id"),
-            F.lit("?cursor="), F.col("next_cursor"),
-        ).alias("url"),
-        F.col("platform"),
-        F.col("kind"),
-        F.col("priority"),
-        (F.col("seq") + 1).alias("seq"),
-        F.col("parent_id"),
-        F.col("next_cursor").alias("cursor"),
-        F.col("parent_seq"),
-        F.lit(0).alias("empty_streak"),
-        F.lit(0).alias("attempt"),
-        nxt.alias("not_before_epoch"),
-        nxt.alias("epoch"),
-    ]
-    d["finish_sel"] = [
+    rows = F.concat(*[F.coalesce(F.when(cond, arr), none) for cond, arr in branches])
+    finish = [
         F.col("url"),
         F.xxhash64("url").alias("url_hash"),
         host_of(F.col("url")).alias("host"),
         *[F.col(c) for c in FRONTIER_COLS if c not in ("url", "url_hash", "host")],
     ]
-    return d
-
-
-def _finish(df: DataFrame, finish_sel=None) -> DataFrame:
-    return df.select(
-        *(
-            finish_sel
-            if finish_sel is not None
-            else [
-                F.col("url"),
-                F.xxhash64("url").alias("url_hash"),
-                host_of(F.col("url")).alias("host"),
-                *[F.col(c) for c in FRONTIER_COLS if c not in ("url", "url_hash", "host")],
-            ]
-        )
-    )
+    return F.inline(rows), finish
 
 
 def emit_successors(
@@ -335,54 +308,11 @@ def emit_successors(
     """
     from mediacrawler_spark.functions.exprcache import cached_exprs
 
-    d = cached_exprs(
+    inline, finish = cached_exprs(
         _successor_exprs, comments_per_page, max_comments_per_note, max_pages_per_chain
     )
-    successes = successes.withColumn("_nxt", F.lit(epoch + 1).cast("int"))
-
-    # --- search page → detail rows (P1 noise filter) -----------------------
-    search = successes.filter(d["search_filter"])
-    items = search.select(*d["items_sel"]).filter(d["items_filter"])
-    details = items.select(*d["details_sel"])
-
-    # --- search page → next page (T4 early exit + 2-strike) ----------------
-    next_search = (
-        search.withColumn("_streak", d["streak"])
-        .filter(d["next_search_filter"])
-        .select(*d["next_search_sel"])
+    return (
+        successes.withColumn("_nxt", F.lit(epoch + 1).cast("int"))
+        .select(inline)
+        .select(*finish)
     )
-
-    # --- detail → first comment page iff any comments (P3) -----------------
-    first_comment_page = (
-        successes.filter(d["detail_filter"])
-        .withColumn("it", d["detail_it"])
-        .filter(d["first_cpage_filter"])
-        .select(*d["first_cpage_sel"])
-    )
-
-    # --- comment page → sub-comment pages + next page ----------------------
-    cpages = successes.filter(d["cpage_filter"])
-    roots = cpages.select(*d["roots_sel"])
-    sub_pages = roots.filter(d["sub_pages_filter"]).select(*d["sub_pages_sel"])
-    next_comment_page = cpages.filter(d["next_cpage_filter"]).select(
-        *d["next_cpage_sel"]
-    )
-
-    # --- listing (creator posts) → detail rows + next listing page ----------
-    listing = successes.filter(d["listing_filter"])
-    l_items = listing.select(*d["l_items_sel"]).filter(d["l_items_filter"])
-    l_details = l_items.select(*d["l_details_sel"])
-    next_listing = listing.filter(d["next_listing_filter"]).select(
-        *d["next_listing_sel"]
-    )
-
-    # --- sub-comment page → next sub page -----------------------------------
-    spages = successes.filter(d["spage_filter"])
-    next_sub_page = spages.filter(d["next_spage_filter"]).select(*d["next_spage_sel"])
-
-    out = None
-    for part in (details, next_search, first_comment_page, sub_pages,
-                 next_comment_page, next_sub_page, l_details, next_listing):
-        part = _finish(part, d["finish_sel"])
-        out = part if out is None else out.unionByName(part)
-    return out

@@ -11,6 +11,13 @@ One epoch = one Spark job DAG:
     everything ──► ONE snapshot commit (frontier logs, seen, spans,
     fetch_log, lineage) — resume re-reads the last commit (north_rule).
 
+The writes that depend only on already-staged tables run overlapped on a
+pool of at most four threads, joined before the commit: the filter update
+and the ``seen`` append beside selection and fetch, then the ``fetched``
+derivatives (spans, retries, quarantine, fetch_log, successors →
+lineage). Each alone is a few small jobs; issued one after another they
+left most cores idle between one job's driver-side planning and the next.
+
 The reference's equivalent is its nested asyncio loops (SURVEY §3.1); the
 epoch loop linearizes them: each platform page-loop iteration becomes a
 frontier row fetched in some epoch, with cursor chains serialized across
@@ -37,8 +44,11 @@ with the epoch's delta, never with |frontier|.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,6 +138,8 @@ class EngineConfig:
 # the frontier's append logs; fetched rows are the equality deletes
 _FRONTIER_LOGS = ("admitted", "retries", "fetched")
 _ROW_KEY = ["url_hash", "attempt"]
+# threads overlapping one epoch's independent snapshot writes
+_WRITE_THREADS = 4
 
 
 @dataclass
@@ -495,6 +507,80 @@ class CrawlEngine:
             self.catalog.drop_table("bloom")
         self.catalog.commit(self.catalog.committed_epoch())
 
+    # -- the epoch's writes derived from ``fetched`` (run on pool threads) ----
+    def _stage_spans(self, successes: DataFrame, epoch: int) -> None:
+        cfg = self.cfg
+        spans = extract_span_rows(successes, cfg.comments_per_page, cfg.max_comments_per_note)
+        self.catalog.stage_append(spans, "span_rows", epoch)
+
+    def _stage_quarantine(self, quarantine: DataFrame, hosts: DataFrame, epoch: int) -> None:
+        """Merge the epoch's newly quarantined hosts. Expired rows
+        (quarantined_until ≤ this epoch) can never block again — selection
+        at epoch E' > epoch needs until > E'. Dropping them keeps the
+        committed table O(active quarantines), not O(every host ever
+        quarantined) rewritten per epoch (VERDICT r03 #2; oracle.py
+        mirrors the prune — CLAUDE.md invariant: both sides)."""
+        merged = (
+            quarantine.unionByName(hosts)
+            .groupBy("host")
+            .agg(F.max("quarantined_until").alias("quarantined_until"))
+            .filter(F.col("quarantined_until") > F.lit(epoch))
+        )
+        self.catalog.stage(merged, "quarantine")
+
+    def _stage_fetch_log(self, fetched: DataFrame, epoch: int) -> None:
+        log = fetched.select(
+            F.lit(epoch).alias("epoch"),
+            F.col("host"),
+            F.col("host_rank").cast("int"),
+            F.col("url"),
+            F.col("kind"),
+            F.col("status").cast("int"),
+        )
+        self.catalog.stage_append(log, "fetch_log", epoch)
+
+    def _stage_successors(
+        self, successes: DataFrame, fetched: DataFrame, epoch: int, n_dedup: int
+    ) -> int:
+        """Stage the next epoch's candidates, then the epoch's lineage
+        (which records their count); returns that count."""
+        cfg = self.cfg
+        successors = emit_successors(
+            successes,
+            epoch,
+            cfg.comments_per_page,
+            cfg.max_comments_per_note,
+            cfg.max_pages_per_chain,
+        )
+        self.catalog.stage(successors, "candidates")
+        n_emitted = self.catalog.staged_rows("candidates")
+        # Lineage (north_rule: frontier epoch, partition id, fetch counts):
+        # fetch_count is attributed PER PARTITION; dedup and emitted counts
+        # are epoch-level facts (they have no per-fetch-partition meaning —
+        # dropped candidates never reach a salted host) and live on ONE
+        # summary row with partition_id = -1, so per-partition sums stay
+        # meaningful (VERDICT r03 #7; fsck checks the shape).
+        per_part = fetched.groupBy(
+            F.lit(epoch).alias("frontier_epoch"),
+            F.pmod(F.xxhash64("salted_host"), F.lit(1024)).cast("int").alias("partition_id"),
+        ).agg(
+            F.count("*").alias("fetch_count"),
+            F.lit(None).cast("long").alias("dedup_count"),
+            F.lit(None).cast("long").alias("emitted_count"),
+        )
+        epoch_row = self.spark.range(1).select(
+            F.lit(epoch).cast("int").alias("frontier_epoch"),
+            F.lit(-1).cast("int").alias("partition_id"),
+            F.lit(None).cast("long").alias("fetch_count"),
+            F.lit(n_dedup).cast("long").alias("dedup_count"),
+            F.lit(n_emitted).cast("long").alias("emitted_count"),
+        )
+        lineage = per_part.unionByName(epoch_row).withColumn(
+            "committed_at", F.lit(cfg.epoch_ts + epoch).cast("long")
+        )
+        self.catalog.stage_append(lineage, "lineage", epoch)
+        return n_emitted
+
     # -- the loop -------------------------------------------------------------
     def run(self, seeds: DataFrame | None, max_epochs: int | None = None) -> RunResult:
         """Run (or resume) the crawl until the frontier drains.
@@ -519,193 +605,172 @@ class CrawlEngine:
         quarantine = self._quarantine()
         bloom = self._load_bloom()
 
-        for epoch in range(start_epoch, start_epoch + (max_epochs or cfg.max_epochs)):
-            # Every stage below is computed ONCE and materialized (staged to
-            # the snapshot), then downstream reads the materialized result —
-            # no chain is re-executed for counts or secondary consumers.
+        pool = ThreadPoolExecutor(max_workers=_WRITE_THREADS)
+        submit = partial(_submit, pool, self.spark)
+        try:
+            for epoch in range(start_epoch, start_epoch + (max_epochs or cfg.max_epochs)):
+                # Every stage below is computed ONCE and materialized (staged
+                # to the snapshot), then downstream reads the materialized
+                # result — no chain is re-executed for counts or secondary
+                # consumers.
 
-            # 1. admission: canonicalize → robots → intra-batch dedup →
-            #    bloom+anti-join (successor URLs from live pages may be
-            #    non-canonical; fixture URLs already are — no-op there).
-            #    Epoch 0 only ever runs on a fresh catalog, from the seed
-            #    batch seeds_to_candidates already canonicalized.
-            if epoch > 0:
-                candidates = (
-                    with_canonical_url(candidates)
-                    .withColumn("url_hash", self._url_hash)
-                    .withColumn("host", self._host_col)
+                # 1. admission: canonicalize → robots → intra-batch dedup →
+                #    bloom+anti-join (successor URLs from live pages may be
+                #    non-canonical; fixture URLs already are — no-op there).
+                #    Epoch 0 only ever runs on a fresh catalog, from the seed
+                #    batch seeds_to_candidates already canonicalized.
+                if epoch > 0:
+                    candidates = (
+                        with_canonical_url(candidates)
+                        .withColumn("url_hash", self._url_hash)
+                        .withColumn("host", self._host_col)
+                    )
+                gated = apply_robots(candidates, self.robots, cfg.epoch_ts)
+                # persist: the admission chain (canonicalize UDF → robots →
+                # dedup shuffle) is consumed by the count, the bloom probe,
+                # and the anti-join — without it the chain would execute 3×
+                unique_batch = dedup_within_batch(gated).persist()
+                n_batch = unique_batch.count()
+                # the filter (if any) covers all of seen; it is rebuilt or
+                # advanced after admission (_update_bloom)
+                if epoch == 0 or (bloom is not None and bloom["n_inserted"] == 0):
+                    # empty seen set: everything is new — skip the filter
+                    # collect/probe/anti-join jobs outright
+                    deduped = unique_batch
+                elif bloom is None:
+                    # no filter over a non-empty seen (a snapshot predating
+                    # the filter, or a filter-kind switch): exact anti-join
+                    deduped = unique_batch.join(
+                        seen.select("url_hash"), on="url_hash", how="left_anti"
+                    )
+                else:
+                    deduped = dedup_against_seen_bloom(
+                        unique_batch,
+                        seen,
+                        bloom["df"],
+                        bloom["params"],
+                        cfg.bloom_broadcast_max_bytes,
+                    )
+                admitted = (
+                    deduped.withColumn("epoch", F.lit(epoch))
+                    .withColumn(
+                        "not_before_epoch", F.greatest("not_before_epoch", F.lit(epoch))
+                    )
+                    .select(*FRONTIER_COLS)
                 )
-            gated = apply_robots(candidates, self.robots, cfg.epoch_ts)
-            # persist: the admission chain (canonicalize UDF → robots →
-            # dedup shuffle) is consumed by the count, the bloom probe,
-            # and the anti-join — without it the chain would execute 3×
-            unique_batch = dedup_within_batch(gated).persist()
-            n_batch = unique_batch.count()
-            # the filter (if any) covers all of seen; it is rebuilt or
-            # advanced after admission (_update_bloom)
-            if epoch == 0 or (bloom is not None and bloom["n_inserted"] == 0):
-                # empty seen set: everything is new — skip the filter
-                # collect/probe/anti-join jobs outright
-                deduped = unique_batch
-            elif bloom is None:
-                # no filter over a non-empty seen (a snapshot predating
-                # the filter, or a filter-kind switch): exact anti-join
-                deduped = unique_batch.join(
-                    seen.select("url_hash"), on="url_hash", how="left_anti"
+                self.catalog.stage_append(admitted, "admitted", epoch)
+                unique_batch.unpersist()
+                admitted = self.catalog.read_staged("admitted", epoch)
+                # footer-metadata count — zero Spark jobs (VERDICT r02 item 9)
+                n_admitted = self.catalog.staged_append_rows("admitted", epoch)
+                n_dedup = n_batch - n_admitted
+                # the filter update and the seen delta (derived from the
+                # already-materialized parquet) need only admitted: they
+                # overlap selection and fetch
+                bloom_f = submit(
+                    self._update_bloom,
+                    bloom, None if epoch == 0 else seen, admitted, n_batch, n_admitted,
                 )
-            else:
-                deduped = dedup_against_seen_bloom(
-                    unique_batch,
-                    seen,
-                    bloom["df"],
-                    bloom["params"],
-                    cfg.bloom_broadcast_max_bytes,
+                writes = [
+                    bloom_f,
+                    submit(
+                        self.catalog.stage_append,
+                        admitted.select("url_hash", "url"), "seen", epoch,
+                    ),
+                ]
+                frontier = frontier.unionByName(admitted)
+
+                # 2. selection: politeness budgets + dynamic quarantine
+                # (full-outer merge — quarantine must survive for hosts that
+                # have no politeness row; see merge_quarantine docstring)
+                pol = merge_quarantine(self.politeness, quarantine)
+                selected, _ = select_fetch_set(
+                    frontier, pol, epoch, cfg.default_budget, cfg.salt_splits,
+                    cache=self._winner_cache,
                 )
-            admitted = (
-                deduped.withColumn("epoch", F.lit(epoch))
-                .withColumn(
-                    "not_before_epoch", F.greatest("not_before_epoch", F.lit(epoch))
+
+                # 3. fetch — materialized once; everything downstream reads it
+                fetched = self.fetch_fn(selected, self.pages)
+                self.catalog.stage_append(fetched, "fetched", epoch)
+                fetched = self.catalog.read_staged("fetched", epoch)
+                n_fetched = self.catalog.staged_append_rows("fetched", epoch)
+                out = classify_outcomes(fetched, epoch)
+
+                # 4-5. everything derived from fetched, overlapped: successors
+                # (→ lineage, which needs their count), span rows, the
+                # frontier's retries log (the frontier only appends: bytes
+                # written scale with the delta, not |frontier|), quarantine,
+                # fetch_log
+                emitted_f = submit(
+                    self._stage_successors, out["successes"], fetched, epoch, n_dedup
                 )
-                .select(*FRONTIER_COLS)
-            )
-            self.catalog.stage_append(admitted, "admitted", epoch)
-            unique_batch.unpersist()
-            admitted = self.catalog.read_staged("admitted", epoch)
-            # seen delta derives from the already-materialized parquet
-            self.catalog.stage_append(
-                admitted.select("url_hash", "url"), "seen", epoch
-            )
-            # footer-metadata count — zero Spark jobs (VERDICT r02 item 9)
-            n_admitted = self.catalog.staged_append_rows("admitted", epoch)
-            n_dedup = n_batch - n_admitted
-            frontier = frontier.unionByName(admitted)
+                writes += [
+                    emitted_f,
+                    submit(self._stage_spans, out["successes"], epoch),
+                    submit(self.catalog.stage_append, out["retries"], "retries", epoch),
+                    submit(self._stage_quarantine, quarantine, out["quarantined_hosts"], epoch),
+                    submit(self._stage_fetch_log, fetched, epoch),
+                ]
+                _join(writes)
+                bloom = bloom_f.result()
+                n_emitted = emitted_f.result()
 
-            # 2. selection: politeness budgets + dynamic quarantine
-            # (full-outer merge — quarantine must survive for hosts that
-            # have no politeness row; see merge_quarantine docstring)
-            pol = merge_quarantine(self.politeness, quarantine)
-            selected, _ = select_fetch_set(
-                frontier, pol, epoch, cfg.default_budget, cfg.salt_splits,
-                cache=self._winner_cache,
-            )
+                # 6. snapshot commit (atomic; also truncates plan lineage)
+                fold = {**fold, "log": fold["log"] + [epoch]}
+                self.catalog.commit(
+                    epoch, meta={"bloom": self._bloom_meta(bloom), "frontier": fold}
+                )
 
-            # 3. fetch — materialized once; everything downstream reads it
-            fetched = self.fetch_fn(selected, self.pages)
-            self.catalog.stage_append(fetched, "fetched", epoch)
-            fetched = self.catalog.read_staged("fetched", epoch)
-            n_fetched = self.catalog.staged_append_rows("fetched", epoch)
-            bloom = self._update_bloom(
-                bloom, None if epoch == 0 else seen, admitted, n_batch, n_admitted
-            )
+                if epoch % 8 == 7:
+                    # Iceberg maintenance analog: compact accumulated append
+                    # dirs (rewrite_data_files), then drop dead versions +
+                    # swapped-out append dirs (expire_snapshots, risk §7.4.5)
+                    for t in ("seen", "span_rows", "fetch_log", "lineage"):
+                        self.catalog.compact_appends(t, cfg.compact_appends_after)
+                    # the frontier logs are folded into a new base and dropped
+                    # (VERDICT r03 #3: retained forever they duplicate
+                    # seen/fetch_log, ~2× long-run snapshot bytes)
+                    self._fold_frontier(epoch)
+                    fold = self._frontier_fold()
+                    self.catalog.expire_versions(keep_last=cfg.expire_keep_last)
+                    self.catalog.roll_log(keep=2, max_lines=cfg.commit_log_max_lines)
 
-            out = classify_outcomes(fetched, epoch)
-            successes = out["successes"]
+                # re-read state: bounds DAG depth across epochs (quarantine
+                # included — its lazy union chain would otherwise reference
+                # every past epoch's fetched dir, growing the plan per epoch
+                # and dangling once maintenance expires those dirs)
+                frontier = self._frontier()
+                seen = self._seen()
+                candidates = self._candidates()
+                quarantine = self._quarantine()
 
-            # 4. extraction + successors
-            spans_e = extract_span_rows(
-                successes, cfg.comments_per_page, cfg.max_comments_per_note
-            )
-            successors = emit_successors(
-                successes,
-                epoch,
-                cfg.comments_per_page,
-                cfg.max_comments_per_note,
-                cfg.max_pages_per_chain,
-            )
-            fetch_log_e = fetched.select(
-                F.lit(epoch).alias("epoch"),
-                F.col("host"),
-                F.col("host_rank").cast("int"),
-                F.col("url"),
-                F.col("kind"),
-                F.col("status").cast("int"),
-            )
-
-            # 5. state transition — the frontier only appends: admitted and
-            # fetched are already staged, the retries complete its log
-            # (bytes written scale with the delta, not |frontier|)
-            self.catalog.stage_append(out["retries"], "retries", epoch)
-            # expired rows (quarantined_until ≤ this epoch) can never block
-            # again — selection at epoch E' > epoch needs until > E'. Drop
-            # them here so the committed table is O(active quarantines),
-            # not O(every host ever quarantined) rewritten per epoch
-            # (VERDICT r03 #2; oracle.py mirrors the prune — CLAUDE.md
-            # invariant: both sides).
-            quarantine = (
-                quarantine.unionByName(out["quarantined_hosts"])
-                .groupBy("host")
-                .agg(F.max("quarantined_until").alias("quarantined_until"))
-                .filter(F.col("quarantined_until") > F.lit(epoch))
-            )
-
-            # 6. snapshot commit (atomic; also truncates plan lineage)
-            self.catalog.stage(successors, "candidates")
-            self.catalog.stage(quarantine, "quarantine")
-            self.catalog.stage_append(spans_e, "span_rows", epoch)
-            self.catalog.stage_append(fetch_log_e, "fetch_log", epoch)
-            n_emitted = self.catalog.staged_rows("candidates")
-            # Lineage (north_rule: frontier epoch, partition id, fetch
-            # counts): fetch_count is attributed PER PARTITION; dedup and
-            # emitted counts are epoch-level facts (they have no
-            # per-fetch-partition meaning — dropped candidates never
-            # reach a salted host) and live on ONE summary row with
-            # partition_id = -1, so per-partition sums stay meaningful
-            # (VERDICT r03 #7; fsck checks the shape).
-            per_part = fetched.groupBy(
-                F.lit(epoch).alias("frontier_epoch"),
-                F.pmod(F.xxhash64("salted_host"), F.lit(1024))
-                .cast("int")
-                .alias("partition_id"),
-            ).agg(
-                F.count("*").alias("fetch_count"),
-                F.lit(None).cast("long").alias("dedup_count"),
-                F.lit(None).cast("long").alias("emitted_count"),
-            )
-            epoch_row = self.spark.range(1).select(
-                F.lit(epoch).cast("int").alias("frontier_epoch"),
-                F.lit(-1).cast("int").alias("partition_id"),
-                F.lit(None).cast("long").alias("fetch_count"),
-                F.lit(n_dedup).cast("long").alias("dedup_count"),
-                F.lit(n_emitted).cast("long").alias("emitted_count"),
-            )
-            lineage_e = per_part.unionByName(epoch_row).withColumn(
-                "committed_at", F.lit(cfg.epoch_ts + epoch).cast("long")
-            )
-            self.catalog.stage_append(lineage_e, "lineage", epoch)
-            fold = {**fold, "log": fold["log"] + [epoch]}
-            self.catalog.commit(
-                epoch, meta={"bloom": self._bloom_meta(bloom), "frontier": fold}
-            )
-
-            if epoch % 8 == 7:
-                # Iceberg maintenance analog: compact accumulated append
-                # dirs (rewrite_data_files), then drop dead versions +
-                # swapped-out append dirs (expire_snapshots, risk §7.4.5)
-                for t in ("seen", "span_rows", "fetch_log", "lineage"):
-                    self.catalog.compact_appends(t, cfg.compact_appends_after)
-                # the frontier logs are folded into a new base and dropped
-                # (VERDICT r03 #3: retained forever they duplicate
-                # seen/fetch_log, ~2× long-run snapshot bytes)
-                self._fold_frontier(epoch)
-                fold = self._frontier_fold()
-                self.catalog.expire_versions(keep_last=cfg.expire_keep_last)
-                self.catalog.roll_log(keep=2, max_lines=cfg.commit_log_max_lines)
-
-            # re-read state: bounds DAG depth across epochs (quarantine
-            # included — its lazy union chain would otherwise reference
-            # every past epoch's fetched dir, growing the plan per epoch
-            # and dangling once maintenance expires those dirs)
-            frontier = self._frontier()
-            seen = self._seen()
-            candidates = self._candidates()
-            quarantine = self._quarantine()
-
-            result.epochs.append(
-                EpochStats(epoch, n_admitted, n_dedup, n_fetched, n_emitted)
-            )
-            if n_fetched == 0 and n_emitted == 0 and n_admitted == 0:
-                # frontier may still hold backoff rows; drained otherwise
-                # (footer-metadata count — no job)
-                if self._frontier_rows() == 0:
-                    break
+                result.epochs.append(
+                    EpochStats(epoch, n_admitted, n_dedup, n_fetched, n_emitted)
+                )
+                if n_fetched == 0 and n_emitted == 0 and n_admitted == 0:
+                    # frontier may still hold backoff rows; drained otherwise
+                    # (footer-metadata count — no job)
+                    if self._frontier_rows() == 0:
+                        break
+        finally:
+            pool.shutdown(wait=True)
         return result
+
+
+def _submit(pool: ThreadPoolExecutor, spark: SparkSession, fn, *args) -> Future:
+    """Run ``fn(*args)`` on ``pool`` with the calling thread's Spark local
+    properties (its job group), captured now and applied to the worker's
+    JVM thread. With PySpark's pinned-thread mode off there is no
+    per-thread state to carry, and ``inheritable_thread_target`` hands
+    the session back instead of a wrapper."""
+    wrap = inheritable_thread_target(spark)
+    return pool.submit(fn if wrap is spark else wrap(fn), *args)
+
+
+def _join(futures: list[Future]) -> None:
+    """Wait for every future, then re-raise the first error in
+    submission order — a failed write never leaves a sibling running
+    past the caller's error handling."""
+    wait(futures)
+    for f in futures:
+        f.result()

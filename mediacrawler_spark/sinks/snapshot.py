@@ -17,11 +17,26 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the schema
+    Spark reads a parquet dir under, whatever its recorded nullability."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def parquet_rows(path: str) -> int:
@@ -47,6 +62,11 @@ class SnapshotCatalog:
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._log = os.path.join(root, "_commits.jsonl")
+        # guards the pending-stage bookkeeping (the four ``_pending*``
+        # collections, version numbering): the epoch loop stages
+        # independent tables from several threads at once. Staging the
+        # SAME table from two threads at once is not supported.
+        self._lock = threading.RLock()
         self._pending: dict[str, int] = {}
         self._pending_appends: dict[str, list[int]] = {}
         self._pending_parts: dict[str, dict] = {}
@@ -101,16 +121,17 @@ class SnapshotCatalog:
         """Maintenance and history operations commit (or rewrite the log)
         on their own, so running one with pending stages would publish a
         half-finished epoch — refused to keep every commit atomic."""
-        pending = {
-            kind: sorted(names)
-            for kind, names in (
-                ("tables", self._pending),
-                ("appends", self._pending_appends),
-                ("parts", self._pending_parts),
-                ("drops", self._pending_drops),
-            )
-            if names
-        }
+        with self._lock:
+            pending = {
+                kind: sorted(names)
+                for kind, names in (
+                    ("tables", self._pending),
+                    ("appends", self._pending_appends),
+                    ("parts", self._pending_parts),
+                    ("drops", self._pending_drops),
+                )
+                if names
+            }
         if pending:
             raise RuntimeError(
                 f"{op} with uncommitted staged state would publish a "
@@ -163,11 +184,13 @@ class SnapshotCatalog:
         same table twice before a commit writes a second version — never
         overwrites the first (a lazy plan may still be reading it). The
         version records its schema like :meth:`stage_append`."""
-        v = max(self._versions.get(table, -1), self._pending.get(table, -1)) + 1
+        with self._lock:
+            v = max(self._versions.get(table, -1), self._pending.get(table, -1)) + 1
         path = self._path(table, v)
         df.write.mode("overwrite").parquet(path)
         self._write_dir_schema(path, df.schema)
-        self._pending[table] = v
+        with self._lock:
+            self._pending[table] = v
 
     def stage_append(self, df: DataFrame, table: str, epoch: int) -> None:
         """Write one epoch's increment of an append-only table (seen,
@@ -183,7 +206,8 @@ class SnapshotCatalog:
         path = os.path.join(self.root, table, f"e={epoch}")
         df.write.mode("overwrite").parquet(path)
         self._write_dir_schema(path, df.schema)
-        self._pending_appends.setdefault(table, []).append(str(epoch))
+        with self._lock:
+            self._pending_appends.setdefault(table, []).append(str(epoch))
 
     @staticmethod
     def _write_dir_schema(path: str, schema: T.StructType) -> None:
@@ -211,18 +235,30 @@ class SnapshotCatalog:
         ``_schema.json`` (a local metadata read, never a parquet footer
         scan). When all dirs agree — the overwhelmingly common case, and
         always true for a single dir — the read is one plain multi-dir
-        parquet scan under that schema: no schema-inference job (Spark
-        makes a user schema nullable on read, so the result equals the
-        inferred one). When dirs disagree — a column was added or
-        dropped mid-crawl — each dir is read under its own schema and
+        parquet scan under the first dir's schema: no schema-inference
+        job. Dirs agree when they hold the same columns (name and type),
+        compared nullable, because Spark makes a user schema nullable on
+        read anyway (so the result equals the inferred one), and in any
+        order, because parquet resolves columns by name: the epoch-0
+        ``fetched`` increment (seed-born rows) orders its columns
+        differently from every later one and must not split the scan.
+        When dirs disagree — a column was added or dropped mid-crawl —
+        each dir is read under its own schema and
         aligned by name (``unionByName`` with missing columns as nulls),
         so old rows read NULL for later-added columns, like Iceberg.
         Renames and type changes are NOT supported: a same-name type
         conflict fails the union loudly rather than guessing. Legacy
         dirs without a schema file keep the historical inferred read."""
-        found = [self._dir_schema(p) for p in paths]
-        recorded = set(found) - {None}
-        if len(recorded) > 1:
+        found = [
+            None if text is None else _as_nullable(T.StructType.fromJson(json.loads(text)))
+            for text in map(self._dir_schema, paths)
+        ]
+        columns = {
+            frozenset(json.dumps(f.jsonValue(), sort_keys=True) for f in schema.fields)
+            for schema in found
+            if schema is not None
+        }
+        if len(columns) > 1:
             out = None
             for p in paths:
                 part = self._read_dirs([p])
@@ -230,9 +266,8 @@ class SnapshotCatalog:
                     part, allowMissingColumns=True
                 )
             return out
-        if recorded and None not in found:
-            schema = T.StructType.fromJson(json.loads(recorded.pop()))
-            return self.spark.read.schema(schema).parquet(*paths)
+        if columns and None not in found:
+            return self.spark.read.schema(found[0]).parquet(*paths)
         return self.spark.read.parquet(*paths)
 
     # -- hash-partitioned replace tables (delta commits) ---------------------
@@ -269,14 +304,15 @@ class SnapshotCatalog:
         the schema its leaves share (``part_col`` dropped)."""
         dirty_set = {int(k) for k in dirty}
         full_rewrite = dirty_set == set(range(n_parts))
-        base = self._pending_parts.get(table) or self._ptables.get(table)
-        if base is not None and int(base["n"]) != n_parts and not full_rewrite:
-            raise ValueError(
-                f"ptable {table!r} is pinned with n={base['n']} partitions; "
-                f"got n_parts={n_parts} — changing the partition count needs "
-                "a full rewrite (pass every partition as dirty)"
-            )
-        v = self._next_version(table)
+        with self._lock:
+            base = self._pending_parts.get(table) or self._ptables.get(table)
+            if base is not None and int(base["n"]) != n_parts and not full_rewrite:
+                raise ValueError(
+                    f"ptable {table!r} is pinned with n={base['n']} partitions; "
+                    f"got n_parts={n_parts} — changing the partition count needs "
+                    "a full rewrite (pass every partition as dirty)"
+                )
+            v = self._next_version(table)
         path = self._path(table, v)
         df.write.mode("overwrite").partitionBy(part_col).parquet(path)
         # leaves hold the data columns only (part_col is a directory key)
@@ -294,14 +330,16 @@ class SnapshotCatalog:
                 parts[str(k)] = v
             else:
                 parts.pop(str(k), None)
-        self._pending_parts[table] = {"n": n_parts, "parts": parts}
+        with self._lock:
+            self._pending_parts[table] = {"n": n_parts, "parts": parts}
 
     def _next_version(self, table: str) -> int:
-        cands = [self._versions.get(table, -1), self._pending.get(table, -1)]
-        for src in (self._ptables, self._pending_parts):
-            ent = src.get(table)
-            if ent and ent["parts"]:
-                cands.append(max(int(x) for x in ent["parts"].values()))
+        with self._lock:
+            cands = [self._versions.get(table, -1), self._pending.get(table, -1)]
+            for src in (self._ptables, self._pending_parts):
+                ent = src.get(table)
+                if ent and ent["parts"]:
+                    cands.append(max(int(x) for x in ent["parts"].values()))
         # strict monotonicity even past versions nothing pins anymore (a
         # fully-drained stage leaves an unpinned v dir until expiry; never
         # reuse its number)
@@ -325,7 +363,8 @@ class SnapshotCatalog:
         partitions + still-pinned clean partitions (the ``part_col`` is a
         directory key, not a data column — reads reconstruct rows without
         it, callers rederive pmod when needed)."""
-        ent = self._pending_parts.get(table) or self._ptables.get(table)
+        with self._lock:
+            ent = self._pending_parts.get(table) or self._ptables.get(table)
         if not ent or not ent["parts"]:
             return None
         return self._read_dirs(self._ptable_paths(ent, table))
@@ -338,9 +377,10 @@ class SnapshotCatalog:
         the first epoch (ADVICE r03 medium — a partial ``stage_parts``
         over a legacy table has no base, silently dropping clean bloom
         shards)."""
-        if self._ptables.get(table) or self._pending_parts.get(table):
-            return None
-        return self._pending.get(table, self._versions.get(table))
+        with self._lock:
+            if self._ptables.get(table) or self._pending_parts.get(table):
+                return None
+            return self._pending.get(table, self._versions.get(table))
 
     def drop_table(self, table: str) -> None:
         """Unpin a full replace table at the next commit. Used by ptable
@@ -348,7 +388,8 @@ class SnapshotCatalog:
         same commit, and the stale full-table pin must not linger (the
         ptable expiry sweep deletes legacy version dirs, which would
         strand the pin and fail fsck)."""
-        self._pending_drops.add(table)
+        with self._lock:
+            self._pending_drops.add(table)
 
     def ptable_meta(self, table: str) -> dict | None:
         """Committed pin map of a partitioned table ({'n': P, 'parts': …})."""
@@ -387,49 +428,50 @@ class SnapshotCatalog:
         small JSON state pinned to the snapshot (e.g. bloom filter sizing +
         fill count — the Iceberg snapshot-properties analog); it replaces
         the previous commit's meta wholesale for the keys given."""
-        tables = {**self._versions, **self._pending}
-        for t in self._pending_drops:
-            tables.pop(t, None)
-        appends = {
-            t: sorted(
-                {str(x) for x in self._appends.get(t, [])}
-                | {str(x) for x in self._pending_appends.get(t, [])}
-            )
-            for t in set(self._appends) | set(self._pending_appends)
-        }
-        ptables = {**self._ptables, **self._pending_parts}
-        new_meta = {**self._meta, **(meta or {})}
-        rec = {
-            "epoch": epoch,
-            "tables": tables,
-            "appends": appends,
-            "ptables": ptables,
-            "meta": new_meta,
-            "committed_at": int(time.time()),
-        }
-        # A crash can leave a torn, newline-less tail; appending straight
-        # after it would concatenate THIS record onto the garbage line
-        # and lose it. Terminate any such tail first, then append.
-        lead = ""
-        if os.path.exists(self._log) and os.path.getsize(self._log) > 0:
-            with open(self._log, "rb") as rf:
-                rf.seek(-1, os.SEEK_END)
-                if rf.read(1) != b"\n":
-                    lead = "\n"
-        with open(self._log, "a") as f:
-            f.write(lead + json.dumps(rec) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        self._versions = tables
-        self._appends = appends
-        self._ptables = ptables
-        self._meta = new_meta
-        self._epoch = int(epoch)
-        self._n_commits += 1
-        self._pending = {}
-        self._pending_appends = {}
-        self._pending_parts = {}
-        self._pending_drops = set()
+        with self._lock:
+            tables = {**self._versions, **self._pending}
+            for t in self._pending_drops:
+                tables.pop(t, None)
+            appends = {
+                t: sorted(
+                    {str(x) for x in self._appends.get(t, [])}
+                    | {str(x) for x in self._pending_appends.get(t, [])}
+                )
+                for t in set(self._appends) | set(self._pending_appends)
+            }
+            ptables = {**self._ptables, **self._pending_parts}
+            new_meta = {**self._meta, **(meta or {})}
+            rec = {
+                "epoch": epoch,
+                "tables": tables,
+                "appends": appends,
+                "ptables": ptables,
+                "meta": new_meta,
+                "committed_at": int(time.time()),
+            }
+            # A crash can leave a torn, newline-less tail; appending straight
+            # after it would concatenate THIS record onto the garbage line
+            # and lose it. Terminate any such tail first, then append.
+            lead = ""
+            if os.path.exists(self._log) and os.path.getsize(self._log) > 0:
+                with open(self._log, "rb") as rf:
+                    rf.seek(-1, os.SEEK_END)
+                    if rf.read(1) != b"\n":
+                        lead = "\n"
+            with open(self._log, "a") as f:
+                f.write(lead + json.dumps(rec) + "\n")
+                f.flush()
+                os.fsync(f.fileno())
+            self._versions = tables
+            self._appends = appends
+            self._ptables = ptables
+            self._meta = new_meta
+            self._epoch = int(epoch)
+            self._n_commits += 1
+            self._pending = {}
+            self._pending_appends = {}
+            self._pending_parts = {}
+            self._pending_drops = set()
 
     def meta(self) -> dict:
         """Snapshot properties of the last commit (empty dict if none)."""
@@ -438,7 +480,9 @@ class SnapshotCatalog:
     def staged_rows(self, table: str) -> int:
         """Row count of a staged replace-table version — parquet footers
         only, zero Spark jobs."""
-        return parquet_rows(self._path(table, self._pending[table]))
+        with self._lock:
+            v = self._pending[table]
+        return parquet_rows(self._path(table, v))
 
     def staged_append_rows(self, table: str, epoch: int) -> int:
         """Row count of one epoch increment (staged or committed) —
@@ -1043,14 +1087,17 @@ class SnapshotCatalog:
         import shutil
 
         removed = 0
+        with self._lock:
+            pending_parts = dict(self._pending_parts)
+            pending_appends = {t: list(v) for t, v in self._pending_appends.items()}
         # -- partitioned tables: keep leaves pinned by recent commits/pending
         recent = self._recent_commits(keep_last)
-        pt_names = set(self._ptables) | set(self._pending_parts)
+        pt_names = set(self._ptables) | set(pending_parts)
         for table in pt_names:
             keep: set[tuple[int, int]] = set()
             for src in [r.get("ptables", {}).get(table) for r in recent] + [
                 self._ptables.get(table),
-                self._pending_parts.get(table),
+                pending_parts.get(table),
             ]:
                 if src:
                     keep |= {(int(v), int(k)) for k, v in src["parts"].items()}
@@ -1083,9 +1130,9 @@ class SnapshotCatalog:
                 if v <= current - keep_last:
                     shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
                     removed += 1
-        for table in set(self._appends) | set(self._pending_appends):
+        for table in set(self._appends) | set(pending_appends):
             live = {str(x) for x in self._appends.get(table, [])} | {
-                str(x) for x in self._pending_appends.get(table, [])
+                str(x) for x in pending_appends.get(table, [])
             }
             tdir = os.path.join(self.root, table)
             if not os.path.isdir(tdir):

@@ -10,6 +10,9 @@ shared ``full_crawl`` fixture (conftest) is constructed by resuming a
 comparison below runs over the resume path.
 """
 
+import shutil
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -331,3 +334,61 @@ def test_lineage_per_partition_attribution(full_crawl):
         == 0
     )
     assert eng.catalog.fsck() == []
+
+
+# ------------------------------------ a failing overlapped epoch write ----
+class _FailingSpansCatalog(SnapshotCatalog):
+    """Raises in the ``span_rows`` write of epoch 2 and slows its sibling
+    ``fetch_log`` write, recording when each epoch-2 write returned."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.returned: dict[str, float] = {}
+
+    def stage_append(self, df, table, epoch):
+        if epoch == 2 and table == "span_rows":
+            raise RuntimeError("span_rows write failed")
+        if epoch == 2 and table == "fetch_log":
+            time.sleep(1.0)  # still running when the span write fails
+        super().stage_append(df, table, epoch)
+        if epoch == 2:
+            self.returned[table] = time.perf_counter()
+
+    def stage(self, df, table):
+        super().stage(df, table)
+        if self.committed_epoch() + 1 == 2:
+            self.returned[table] = time.perf_counter()
+
+
+def test_failed_overlapped_write_commits_nothing_and_resumes(
+    spark, udfs, partial_crawl, oracle_result, tmp_path
+):
+    """A write that fails on a pool thread fails the epoch only after its
+    sibling writes returned, commits nothing, and a fresh engine resumed
+    from the last commit still reaches the oracle's crawl."""
+    root = str(tmp_path / "cat")
+    shutil.copytree(partial_crawl["root"], root)
+    cat = _FailingSpansCatalog(spark, root)
+    dims = (udfs["pages"], udfs["robots"], udfs["politeness"])
+    with pytest.raises(RuntimeError, match="span_rows write failed"):
+        CrawlEngine(spark, cat, *dims, CFG).run(None)
+    raised_at = time.perf_counter()
+    siblings = {"seen", "retries", "quarantine", "fetch_log", "candidates", "lineage"}
+    assert siblings <= set(cat.returned), sorted(cat.returned)
+    assert max(cat.returned.values()) < raised_at
+    assert cat.committed_epoch() == 1
+    assert SnapshotCatalog(spark, root).committed_epoch() == 1
+
+    eng = CrawlEngine(spark, SnapshotCatalog(spark, root), *dims, CFG)
+    res = eng.run(None)
+    assert res.epochs[0].epoch == 2
+    assert {r["url"] for r in eng.catalog.read("seen").collect()} == oracle_result.seen
+    order: dict[str, list] = {}
+    for r in eng.fetch_log().orderBy("host", "epoch", "host_rank").collect():
+        order.setdefault(r["host"], []).append((r["url"], r["epoch"], r["kind"]))
+    assert order == oracle_result.fetch_order
+    docs = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in eng.documents().collect()
+    }
+    assert docs == oracle_result.documents
