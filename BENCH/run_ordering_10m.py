@@ -93,7 +93,7 @@ def run(n_urls: int, spark=None, seen_filter: str = "bloom") -> dict:
         + [(f"h{i}.example.test", BUDGET, 0) for i in range(1, N_HOSTS + 1)],
         "host string, budget_per_epoch int, quarantined_until int",
     )
-    selected, _ = select_fetch_set(admitted, politeness, epoch=0, default_budget=BUDGET)
+    selected = select_fetch_set(admitted, politeness, epoch=0, default_budget=BUDGET)
 
     eng_canon = cand.select("url").toPandas()["url"].to_numpy()
     eng_admitted = np.sort(admitted.select("url_hash").toPandas()["url_hash"].to_numpy())

@@ -147,8 +147,7 @@ def frontier_bench(
         params = BloomParams.size(max(1024, n_urls), fpp=0.01, n_shards=bloom_shards)
         table = build_bloom_table(seen, params)
         admitted = dedup_against_seen_bloom(unique, seen, table, params).persist()
-        selected, _deferred = select_fetch_set(admitted, politeness, epoch=0,
-                                               default_budget=budget)
+        selected = select_fetch_set(admitted, politeness, epoch=0, default_budget=budget)
         n_sel = selected.count()
         n_adm = admitted.count()
         for df in (unique, seen, admitted):

@@ -22,7 +22,8 @@ rewrite pays.
 
 Reference scope: the reference crawler has no layout optimizer; this is
 a SURVEY §2 "beyond the reference" storage-layout primitive (the
-snapshot ptables cluster one key — url_hash; z-order is the 2-D form).
+seen-filter ptable clusters one key — url_hash — into shards; z-order is
+the 2-D form).
 """
 
 from __future__ import annotations

@@ -150,12 +150,12 @@ def select_fetch_set(
     salt_splits: int = 8,
     winner_broadcast_max_rows: int = 2_000_000,
     cache: dict | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split the due frontier into (selected, deferred) for this epoch.
+) -> DataFrame:
+    """The rows of the due frontier fetched this epoch.
 
-    ``selected`` carries ``salted_host`` (fetch-stage partition key) and
+    They carry ``salted_host`` (fetch-stage partition key) and
     ``host_rank`` (the deterministic per-host order — the value the
-    crawl-ordering oracle checks). ``deferred`` re-enters the frontier.
+    crawl-ordering oracle checks).
 
     The winner set is ≈ (#active hosts × budget) rows. Small sets are
     broadcast back onto the frontier (no frontier shuffle); past
@@ -172,7 +172,6 @@ def select_fetch_set(
 
     d = cached_exprs(_select_exprs, default_budget, salt_splits)
     due = frontier.filter(F.col("not_before_epoch") <= F.lit(epoch))
-    held = frontier.filter(F.col("not_before_epoch") > F.lit(epoch))
 
     pol = politeness.select(*d["pol_sel"])
     narrow = due.select("url_hash", "host", "priority", "seq")
@@ -210,11 +209,7 @@ def select_fetch_set(
         # broadcast path: the big frontier never reshuffles (url_hash is
         # unique per frontier row by construction)
         wk = F.broadcast(winner_keys)
-        wk_anti = F.broadcast(winner_keys.select("_w_hash"))
     else:
         # shuffle path: millions of hosts would exceed broadcast limits
         wk = winner_keys
-        wk_anti = winner_keys.select("_w_hash")
-    selected = due.join(wk, d["rejoin_cond"], "inner").drop("_w_hash")
-    deferred = held.unionByName(due.join(wk_anti, d["rejoin_cond"], "left_anti"))
-    return selected, deferred
+    return due.join(wk, d["rejoin_cond"], "inner").drop("_w_hash")

@@ -28,11 +28,12 @@ state is re-read from parquet, so the logical plan never grows with epoch
 count.
 
 The frontier is merge-on-read (the Iceberg-v2 equality-delete pattern): a
-folded base ptable plus the ``admitted``/``retries``/``fetched`` append
-logs committed since the last fold. ``(url_hash, attempt)`` identifies a
-frontier row — an admitted row has attempt 0 and seen-dedup admits each
-url_hash once; a retry of a row fetched at attempt k is inserted once with
-attempt k+1; a fetched row carries the attempt of the row it consumed — so
+folded base (one replace version) plus the ``admitted``/``retries``/
+``fetched`` append logs committed since the last fold. ``(url_hash,
+attempt)`` identifies a frontier row — an admitted row has attempt 0 and
+seen-dedup admits each url_hash once; a retry of a row fetched at attempt
+k is inserted once with attempt k+1; a fetched row carries the attempt of
+the row it consumed — so
 
     frontier = (base ∪ admitted ∪ retries) left_anti fetched
                on (url_hash, attempt)
@@ -101,23 +102,14 @@ class EngineConfig:
     # checkpoint records so startup/maintenance parses stay O(1) in epochs
     commit_log_max_lines: int = 64
     # snapshot-expiry depth (Iceberg expire_snapshots analog): maintenance
-    # keeps version/ptable-leaf dirs pinned by this many recent commits.
+    # keeps this many newest versions of each replace table (the frontier
+    # base: this many folds) and the filter-shard leaves pinned by this
+    # many recent commits.
     # This is also the catalog.rollback_to reach knob — rollback refuses
     # records whose pins expiry removed, so deepen this (and the prune /
     # compaction thresholds) when operational rewind matters more than
     # storage.
     expire_keep_last: int = 2
-    # hash-partition count (pmod(url_hash, P) directory layout) of the
-    # frontier's folded base, which only the maintenance fold rewrites.
-    # Size so one partition ≈ a few hundred MB at the design point (10^10
-    # rows → P in the thousands); seeds a fresh catalog's first fold.
-    frontier_partitions: int = 32
-    # adaptive repartitioning: when the largest committed base partition
-    # exceeds this many bytes, the next fold writes the base with 2P
-    # partitions (VERDICT r03 #4 — the 10^10 design point needs thousands
-    # of partitions a fresh catalog wouldn't start with). Default sized so
-    # a partition stays comfortably inside one executor task's memory.
-    frontier_max_part_bytes: int = 256 << 20
     # URL-seen prefilter kind (north_rule "bloom/cuckoo"): bloom is the
     # smaller append-only default; cuckoo supports DELETE for TTL/eviction
     # re-crawl scenarios (kernels: operators/dedup.py, operators/cuckoo.py)
@@ -232,7 +224,7 @@ class CrawlEngine:
     def _frontier_rows(self) -> int:
         """Exact committed frontier row count from parquet footers only —
         no Spark job: each fetched row deletes exactly one live row."""
-        n = self.catalog.ptable_rows("frontier")
+        n = self.catalog.rows("frontier")
         for e in self._frontier_fold()["log"]:
             n += self.catalog.staged_append_rows("admitted", e)
             n += self.catalog.staged_append_rows("retries", e)
@@ -282,7 +274,7 @@ class CrawlEngine:
         and the commit meta pins it for resume. Bounds both the
         per-epoch dirty-shard write (O(target) per touched shard, not
         O(|filter|/16)) and the unit of work of the shard-wise cogroup
-        probe — the same geometric discipline as the frontier fold's P."""
+        probe."""
         import math
 
         bytes_per_key = SEEN_FILTERS[self.cfg.seen_filter].bytes_per_key(self.cfg.bloom_fpp)
@@ -442,69 +434,37 @@ class CrawlEngine:
         return df
 
     def _fold_frontier(self, epoch: int) -> None:
-        """Fold the frontier logs into a new base: ONE full rewrite of the
-        merged view, committed at ``epoch`` with the new fold meta, then
-        prune the folded increments. The meta already excludes them, so
-        the prune is pure garbage collection — a crash between the fold
-        commit and the prune loses nothing.
-
-        The fold chooses the base's partition count: the committed P
-        (``frontier_partitions`` on a fresh catalog), doubled when the
-        largest committed leaf exceeds ``frontier_max_part_bytes`` —
-        doubling keeps total re-layout work O(|frontier|·log P) over a
-        crawl, the geometric-growth argument of the bloom capacity
-        policy."""
-        ent = self.catalog.ptable_meta("frontier")
-        n = int(ent["n"]) if ent else self.cfg.frontier_partitions
-        sizes = self.catalog.ptable_part_bytes("frontier")
-        if sizes and max(sizes.values()) > self.cfg.frontier_max_part_bytes:
-            n *= 2
-        part = F.pmod(F.col("url_hash"), F.lit(n)).cast("int")
-        self.catalog.stage_parts(
-            self._frontier().withColumn("_part", part).repartition(n, "_part"),
-            "frontier",
-            n,
-            list(range(n)),
-        )
+        """Fold the frontier logs into a new base: the merged view written
+        as ONE replace version, committed at ``epoch`` with the new fold
+        meta, then prune the folded increments. The meta already excludes
+        them, so the prune is pure garbage collection — a crash between
+        the fold commit and the prune loses nothing. No reader exploits a
+        layout of the base (selection re-shuffles by host), so its files
+        follow the merged plan's partitions, like every other version.
+        A base an older snapshot pinned as a ptable moves to a version
+        here: the catalog keeps one layout per table name."""
+        self.catalog.stage(self._frontier(), "frontier")
         self.catalog.commit(epoch, meta={"frontier": {"folded_through": epoch, "log": []}})
         for t in _FRONTIER_LOGS:
             self.catalog.prune_appends(t, min_epoch=epoch + 1)
 
     def _migrate_legacy_state(self) -> None:
-        """Fold a pre-ptable snapshot (frontier/bloom committed as FULL
-        replace tables, rounds ≤2) into the partitioned layout with one
-        full-dirty migration commit before the first resumed epoch.
+        """Move a pre-ptable bloom (committed as a FULL replace table,
+        rounds ≤2) into the sharded layout with one full-dirty migration
+        commit before the first resumed epoch.
 
         Without this, resuming an old-format snapshot silently corrupts
         state (ADVICE r03 medium): ``stage_parts('bloom', base=None)``
         keeps only dirty pins, so clean shards vanish and the
         definitely-new fast path (which skips the left_anti confirm)
-        re-admits already-seen URLs. The migrated frontier becomes the
-        base, with no fold meta (folded through the head)."""
-        needs = [
-            t
-            for t in ("frontier", "bloom")
-            if self.catalog.legacy_version(t) is not None
-        ]
-        if not needs:
+        re-admits already-seen URLs. A frontier of that format needs no
+        migration: it is a replace version, the layout the fold writes,
+        and with no fold meta it is read as the base."""
+        if self.catalog.legacy_version("bloom") is None:
             return
-        if "frontier" in needs:
-            n = self.cfg.frontier_partitions
-            df = self.catalog.read("frontier")
-            self.catalog.stage_parts(
-                df.withColumn(
-                    "_part", F.pmod(F.col("url_hash"), F.lit(n)).cast("int")
-                ),
-                "frontier",
-                n,
-                list(range(n)),
-            )
-            self.catalog.drop_table("frontier")
-        if "bloom" in needs:
-            m = self.catalog.meta().get("bloom") or {}
-            n_shards = int(m.get("n_shards", self.cfg.bloom_shards))
-            self._stage_bloom(self.catalog.read("bloom"), n_shards, list(range(n_shards)))
-            self.catalog.drop_table("bloom")
+        m = self.catalog.meta().get("bloom") or {}
+        n_shards = int(m.get("n_shards", self.cfg.bloom_shards))
+        self._stage_bloom(self.catalog.read("bloom"), n_shards, list(range(n_shards)))
         self.catalog.commit(self.catalog.committed_epoch())
 
     # -- the epoch's writes derived from ``fetched`` (run on pool threads) ----
@@ -684,7 +644,7 @@ class CrawlEngine:
                 # (full-outer merge — quarantine must survive for hosts that
                 # have no politeness row; see merge_quarantine docstring)
                 pol = merge_quarantine(self.politeness, quarantine)
-                selected, _ = select_fetch_set(
+                selected = select_fetch_set(
                     frontier, pol, epoch, cfg.default_budget, cfg.salt_splits,
                     cache=self._winner_cache,
                 )

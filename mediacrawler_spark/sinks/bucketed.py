@@ -14,17 +14,18 @@ tests/test_bucketed.py), so the join scales with scan bandwidth alone.
 the merge phase can skip its sort when one file per bucket is read.
 
 This is the saveAsTable face of the engine's own co-location strategy:
-the snapshot's frontier/seen ptables shard by ``pmod(url_hash, P)`` with
-P pinned in the snapshot (sinks/snapshot.py) — same idea, custom commit
-protocol. Use bucketed tables when downstream consumers are plain
-SQL/DataFrame readers that should inherit the layout through the
-catalog rather than through engine code.
+the snapshot's seen-filter ptable keeps each ``pmod(url_hash, n_shards)``
+shard in its own leaf dir, with the shard count pinned in the snapshot
+(sinks/snapshot.py) — same idea, custom commit protocol. Use bucketed
+tables when downstream consumers are plain SQL/DataFrame readers that
+should inherit the layout through the catalog rather than through engine
+code.
 
-Bucket-count sizing at the 100 TB design point follows the same rule as
-the snapshot ptable: target 128-512 MB of parquet per bucket file per
-write task's output, i.e. N ≈ table_bytes / (tasks × 256 MB), rounded
-to a power of two so doubling data doubles buckets without remixing
-keys across old bucket boundaries more than necessary.
+Bucket-count sizing at the 100 TB design point: target 128-512 MB of
+parquet per bucket file per write task's output, i.e. N ≈ table_bytes /
+(tasks × 256 MB), rounded to a power of two (as the filter's shard count
+is) so doubling data doubles buckets without remixing keys across old
+bucket boundaries more than necessary.
 
 Environment note: the sandbox's in-memory catalog keeps bucket metadata
 for the session only — on a real deployment the same calls write

@@ -3,7 +3,8 @@ tables must rewrite only the partitions an epoch touched, never the full
 table. Covers the SnapshotCatalog ptable mechanism directly, then the
 engine-level 'done' criterion on the merge-on-read frontier — an epoch
 only appends its logs, so bytes written per epoch are O(delta); the fold
-is the only frontier rewrite — with unchanged e2e results."""
+is the only frontier rewrite, one replace version — with unchanged e2e
+results."""
 
 from __future__ import annotations
 
@@ -40,7 +41,7 @@ def test_stage_parts_roundtrip_partial_rewrite_and_drop(spark, tmp_path):
     cat.commit(0)
     assert cat.has("t")
     assert cat.read("t").count() == 100
-    assert cat.ptable_rows("t") == 100
+    assert cat.rows("t") == 100
 
     # partial rewrite: new content for parts {2,3} only — doubled vals
     delta = _pdf(spark, 0, 100).where(F.col("_part").isin([2, 3])).withColumn(
@@ -109,7 +110,7 @@ def test_expire_keeps_pinned_leaves_across_versions(spark, tmp_path):
 
 # ---- the merge-on-read frontier on a wide-frontier crawl ------------------
 # 240 notes on 3 hosts at budget 2: the frontier stays far wider than any
-# epoch's fetch set, and the per-epoch delta is larger than P = 8.
+# epoch's fetch set, and some per-epoch delta is wider than _WIDE_DELTA rows.
 _WIDE = UniverseParams(
     n_notes=240,
     n_hosts=3,
@@ -120,9 +121,9 @@ _WIDE = UniverseParams(
     budget_hot=2,
     budget_warm=2,
 )
-_WIDE_P = 8
+_WIDE_DELTA = 8
 _WIDE_EPOCHS = 10  # crosses the maintenance fold at epoch 7
-_WIDE_COPIES = (4, 8)  # snapshot copies kept mid-cycle, before/after the fold
+_WIDE_COPIES = (4,)  # snapshot copies kept mid-cycle, before the fold
 
 
 def _du(path) -> int:
@@ -136,45 +137,58 @@ def _wide_cfg(seen_filter="bloom", **kw) -> EngineConfig:
     return EngineConfig(
         default_budget=2,
         max_comments_per_note=10,
-        frontier_partitions=_WIDE_P,
         seen_filter=seen_filter,
         **kw,
     )
 
 
-class _PartsSpy(SnapshotCatalog):
-    """Records every stage_parts table, in call order."""
+class _StageSpy(SnapshotCatalog):
+    """Records every ``(method, table)`` of ``stage``/``stage_parts``, in
+    call order, and the executed plan of every frontier version staged."""
 
     def __init__(self, spark, root):
         super().__init__(spark, root)
-        self.parts_calls: list[str] = []
+        self.calls: list[tuple[str, str]] = []
+        self.frontier_plans: list[str] = []
+
+    def stage(self, df, table):
+        self.calls.append(("stage", table))
+        super().stage(df, table)
+        if table == "frontier":
+            self.frontier_plans.append(df._jdf.queryExecution().executedPlan().toString())
 
     def stage_parts(self, df, table, n_parts, dirty, part_col="_part"):
-        self.parts_calls.append(table)
+        self.calls.append(("stage_parts", table))
         super().stage_parts(df, table, n_parts, dirty, part_col)
 
 
+def _base_pin(cat: SnapshotCatalog) -> int | None:
+    """Committed version of the frontier base (None before the first fold)."""
+    return (cat.last_commit() or {}).get("tables", {}).get("frontier")
+
+
 def _frontier_bytes(cat: SnapshotCatalog, log: list[int]) -> int:
-    """Live frontier bytes: the base's pinned leaves plus the log
-    increments on top of it."""
-    base = sum(cat.ptable_part_bytes("frontier").values())
+    """Live frontier bytes: the base version plus the log increments on
+    top of it."""
+    v = _base_pin(cat)
+    base = 0 if v is None else _du(os.path.join(cat.root, "frontier", f"v={v}"))
     return base + sum(_du(os.path.join(cat.root, t, f"e={e}")) for t in _LOGS for e in log)
 
 
 def crawl_wide(spark, uni, root, seen_filter, n_epochs=_WIDE_EPOCHS, copies=()):
     """Crawl the wide universe one epoch per ``run`` call and record, per
-    epoch: its stats, the tables it staged as partitions, the bytes it
-    wrote under ``frontier/`` (new base version dirs) and the bytes of its
-    log increments, the live frontier bytes, the footer row count and the
-    merged read's row count. ``copies`` names epochs after which the
-    snapshot dir is copied to ``<root>_at<epoch>``."""
+    epoch: its stats, the frontier stages it made, the base pin before and
+    after, the ``frontier/v=`` dirs and bytes it wrote (new base versions)
+    and the bytes of its log increments, the live frontier bytes, the
+    footer row count and the merged read's row count. ``copies`` names
+    epochs after which the snapshot dir is copied to ``<root>_at<epoch>``."""
     import shutil
 
     pages = spark.createDataFrame(uni.pages, PAGES_SCHEMA)
     robots = spark.createDataFrame(uni.robots, ROBOTS_SCHEMA)
     politeness = spark.createDataFrame(uni.politeness, POLITENESS_SCHEMA)
     seeds = spark.createDataFrame(uni.seeds, SEEDS_SCHEMA)
-    cat = _PartsSpy(spark, root)
+    cat = _StageSpy(spark, root)
     eng = CrawlEngine(spark, cat, pages, robots, politeness, _wide_cfg(seen_filter))
     fdir = os.path.join(root, "frontier")
 
@@ -185,20 +199,20 @@ def crawl_wide(spark, uni, root, seen_filter, n_epochs=_WIDE_EPOCHS, copies=()):
 
     records = []
     for k in range(n_epochs):
-        before_dirs, n_calls = base_dirs(), len(cat.parts_calls)
-        ptable_before = cat.ptable_meta("frontier")
+        before_dirs, n_calls = base_dirs(), len(cat.calls)
+        pin_before = _base_pin(cat)
         st = eng.run(seeds if k == 0 else None, max_epochs=1).epochs[-1]
         assert st.epoch == k
         fold = eng._frontier_fold()
+        new_dirs = {d: b for d, b in base_dirs().items() if d not in before_dirs}
         rec = {
             "stats": st,
             "folded": fold["folded_through"] == k,
-            "parts_staged": cat.parts_calls[n_calls:],
-            "ptable_before": ptable_before,
-            "ptable_after": cat.ptable_meta("frontier"),
-            "base_written": sum(
-                b for d, b in base_dirs().items() if d not in before_dirs
-            ),
+            "frontier_stages": [m for m, t in cat.calls[n_calls:] if t == "frontier"],
+            "pin_before": pin_before,
+            "pin_after": _base_pin(cat),
+            "new_base_dirs": sorted(new_dirs),
+            "base_written": sum(new_dirs.values()),
             "live": _frontier_bytes(cat, fold["log"]),
             "footer_rows": eng._frontier_rows(),
             "merged_rows": eng._frontier().count(),
@@ -253,8 +267,8 @@ def wide_universe():
 @pytest.fixture(scope="session")
 def wide_crawl(spark, wide_universe, tmp_path_factory):
     """ONE wide-frontier crawl per filter kind, made on first use and
-    shared by the tests below (the delta-write, footer-count, resume and
-    P-growth checks all read the same run instead of each crawling the
+    shared by the tests below (the delta-write, fold-plan, footer-count and
+    resume checks all read the same run instead of each crawling the
     universe again)."""
     crawls: dict[str, dict] = {}
 
@@ -272,37 +286,39 @@ def wide_crawl(spark, wide_universe, tmp_path_factory):
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
 def test_epoch_writes_are_delta_not_full_state(wide_crawl, wide_universe, seen_filter):
-    """The 'done' criterion, for an epoch delta larger than P: between
-    folds an epoch stages no frontier leaf and writes no frontier base
-    bytes — the frontier bytes it writes are its retries increment, so
-    they never exceed its admitted + retries increments, and stay under
-    half the live frontier's bytes (base + logs). Only the
-    maintenance fold (epoch 7) rewrites the base, once, in full. The
-    crawl's seen set and per-host fetch order equal the oracle's."""
+    """The 'done' criterion, for a wide epoch delta: between folds an
+    epoch stages no frontier version, leaves the base pin unchanged and
+    writes no ``frontier/v=`` dir — the frontier bytes it writes are its
+    retries increment, so they never exceed its admitted + retries
+    increments, and stay under half the live frontier's bytes (base +
+    logs). Only the maintenance fold (epoch 7) rewrites the base: once,
+    in full, as one replace version through ``stage`` (never as
+    partitions). The crawl's seen set and per-host fetch order equal the
+    oracle's."""
     crawl = wide_crawl(seen_filter)
     recs = crawl["records"]
     assert [r["folded"] for r in recs] == [k % 8 == 7 for k in range(_WIDE_EPOCHS)]
     between = [r for r in recs if not r["folded"]]
     assert any(
-        r["stats"].admitted + r["stats"].fetched > _WIDE_P for r in between[1:]
-    ), "some epoch between folds must carry a delta wider than P"
+        r["stats"].admitted + r["stats"].fetched > _WIDE_DELTA for r in between[1:]
+    ), "some epoch between folds must carry a wide delta"
     for r in between:
         e = r["stats"].epoch
-        assert "frontier" not in r["parts_staged"], (e, r["parts_staged"])
-        assert r["ptable_after"] == r["ptable_before"], e
-        assert r["base_written"] == 0, (e, r["base_written"])
+        assert r["frontier_stages"] == [], (e, r["frontier_stages"])
+        assert r["pin_after"] == r["pin_before"], e
+        assert r["new_base_dirs"] == [], (e, r["new_base_dirs"])
         frontier_written = r["base_written"] + r["written"]["retries"]
         assert frontier_written <= r["written"]["admitted"] + r["written"]["retries"]
         # and a small fraction of the live frontier (the old partitioned
         # rewrite wrote ~all of it every epoch)
         assert frontier_written < r["live"] / 2, (e, frontier_written, r["live"])
     fold = recs[7]
-    assert fold["parts_staged"].count("frontier") == 1
-    ent = fold["ptable_after"]
-    assert ent["n"] == _WIDE_P and len(set(ent["parts"].values())) == 1
+    assert fold["frontier_stages"] == ["stage"]
+    assert fold["new_base_dirs"] == [f"v={fold['pin_after']}"]
     assert fold["base_written"] > 0
     # the fold pruned every folded increment; the log restarts after it
     cat = crawl["eng"].catalog
+    assert cat.ptable_meta("frontier") is None
     for t in _LOGS:
         assert sorted(int(x) for x in cat._appends[t]) == list(range(8, _WIDE_EPOCHS)), t
     assert cat.fsck() == []
@@ -312,6 +328,16 @@ def test_epoch_writes_are_delta_not_full_state(wide_crawl, wide_universe, seen_f
     assert got["seen"] == want.seen
     assert got["order"] == want.fetch_order
     assert got["frontier"], "the frontier must outlive the crawl window"
+
+
+def test_fold_plan_has_no_repartition(wide_crawl):
+    """The fold writes the merged view as planned: its executed plan has
+    no ``REPARTITION_BY_NUM`` exchange (the partitioned base's full
+    ``repartition(n, "_part")`` shuffle is gone)."""
+    plans = wide_crawl("bloom")["eng"].catalog.frontier_plans
+    assert len(plans) == 1
+    assert "LeftAnti" in plans[0], plans[0]  # the merge itself is in the plan
+    assert "REPARTITION_BY_NUM" not in plans[0], plans[0]
 
 
 def test_frontier_footer_count_equals_merged_read(wide_crawl):
@@ -483,47 +509,3 @@ def test_ptable_state_machine_matches_dict_model(spark, tmp_path_factory, ops):
     want = sorted(v for vals in model.values() for v in vals)
     assert got == want, (got, want, ops)
     assert cat.fsck() == []
-
-
-def test_frontier_grows_partition_count_mid_crawl(spark, wide_crawl, wide_universe):
-    """VERDICT r03 #4: P doubles at a fold. From the epoch-8 snapshot of
-    the wide crawl (base P = 8 from the epoch-7 fold, log [8]), a fold
-    under a 1-byte partition threshold rewrites the merged frontier once
-    as a P = 16 base (every leaf one version, same rows, empty log), and
-    the crawl resumed on the grown layout reaches the IDENTICAL state as
-    the never-grown crawl after the same epochs (growth is pure
-    layout)."""
-    import shutil
-
-    crawl = wide_crawl("bloom")
-    root = crawl["root"] + "_grow"
-    shutil.copytree(crawl["root"] + "_at8", root)
-    pages = spark.createDataFrame(wide_universe.pages, PAGES_SCHEMA)
-    robots = spark.createDataFrame(wide_universe.robots, ROBOTS_SCHEMA)
-    politeness = spark.createDataFrame(wide_universe.politeness, POLITENESS_SCHEMA)
-
-    cat = SnapshotCatalog(spark, root)
-    assert cat.ptable_meta("frontier")["n"] == _WIDE_P
-    eng = CrawlEngine(
-        spark, cat, pages, robots, politeness, _wide_cfg(frontier_max_part_bytes=1)
-    )
-    before = sorted(tuple(r) for r in eng._frontier().select(*FRONTIER_COLS).collect())
-    assert before, "frontier must outlive the cut"
-    eng._fold_frontier(cat.committed_epoch())
-    ent = cat.ptable_meta("frontier")
-    assert ent["n"] == 2 * _WIDE_P
-    assert len(set(ent["parts"].values())) == 1  # one full rewrite
-    assert eng._frontier_fold() == {"folded_through": 8, "log": []}
-    assert all(cat._appends[t] == [] for t in _LOGS)
-    after = sorted(tuple(r) for r in eng._frontier().select(*FRONTIER_COLS).collect())
-    assert after == before
-    assert cat.ptable_rows("frontier") == len(before)
-
-    # resume on the grown layout with fresh objects and a sane threshold
-    # (no further growth) for the epochs the shared crawl ran after 8
-    cat2 = SnapshotCatalog(spark, root)
-    eng2 = CrawlEngine(spark, cat2, pages, robots, politeness, _wide_cfg())
-    eng2.run(None, max_epochs=_WIDE_EPOCHS - 9)
-    assert cat2.ptable_meta("frontier")["n"] == 2 * _WIDE_P
-    assert _crawl_state(eng2) == _crawl_state(crawl["eng"])
-    assert cat2.fsck() == []

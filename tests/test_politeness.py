@@ -19,6 +19,12 @@ def _frontier(spark, rows):
     return spark.createDataFrame(full, FRONTIER_SCHEMA)
 
 
+def _deferred(fr, sel):
+    """The frontier rows an epoch does not fetch: they stay in the
+    frontier for a later epoch."""
+    return fr.join(sel, "url_hash", "left_anti")
+
+
 def _pol(spark, budgets, quarantined=()):
     q = dict(quarantined)
     return spark.createDataFrame(
@@ -34,17 +40,17 @@ def test_budget_and_priority_order(spark):
         for i, (p, s) in enumerate([(1, 0), (0, 2), (0, 0), (1, 1), (0, 1), (1, 2)])
     ]
     fr = _frontier(spark, rows)
-    sel, deferred = select_fetch_set(fr, _pol(spark, {"a": 3}), epoch=0)
+    sel = select_fetch_set(fr, _pol(spark, {"a": 3}), epoch=0)
     got = [(r["priority"], r["seq"], r["host_rank"]) for r in sel.orderBy("host_rank").collect()]
     assert got == [(0, 0, 1), (0, 1, 2), (0, 2, 3)]
-    assert deferred.count() == 3
+    assert _deferred(fr, sel).count() == 3
 
 
 def test_budget_is_per_host(spark):
     rows = [(f"https://{h}/{i}", h_i * 100 + i, h, "detail", 0, i, 0)
             for h_i, h in enumerate(["a", "b"]) for i in range(5)]
     fr = _frontier(spark, rows)
-    sel, _ = select_fetch_set(fr, _pol(spark, {"a": 2, "b": 4}), epoch=0)
+    sel = select_fetch_set(fr, _pol(spark, {"a": 2, "b": 4}), epoch=0)
     counts = {r["host"]: r["n"] for r in sel.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert counts == {"a": 2, "b": 4}
 
@@ -52,19 +58,19 @@ def test_budget_is_per_host(spark):
 def test_not_before_defers(spark):
     rows = [("https://a/1", 1, "a", "detail", 0, 0, 5), ("https://a/2", 2, "a", "detail", 0, 1, 0)]
     fr = _frontier(spark, rows)
-    sel, deferred = select_fetch_set(fr, _pol(spark, {"a": 10}), epoch=0)
+    sel = select_fetch_set(fr, _pol(spark, {"a": 10}), epoch=0)
     assert [r["url"] for r in sel.collect()] == ["https://a/2"]
-    assert [r["url"] for r in deferred.collect()] == ["https://a/1"]
+    assert [r["url"] for r in _deferred(fr, sel).collect()] == ["https://a/1"]
 
 
 def test_quarantine_defers_whole_host(spark):
     rows = [("https://a/1", 1, "a", "detail", 0, 0, 0), ("https://b/1", 2, "b", "detail", 0, 0, 0)]
     fr = _frontier(spark, rows)
-    sel, deferred = select_fetch_set(
+    sel = select_fetch_set(
         fr, _pol(spark, {"a": 5, "b": 5}, quarantined={"a": 3}), epoch=1
     )
     assert [r["host"] for r in sel.collect()] == ["b"]
-    assert [r["host"] for r in deferred.collect()] == ["a"]
+    assert [r["host"] for r in _deferred(fr, sel).collect()] == ["a"]
 
 
 def test_merge_quarantine_keeps_hosts_absent_from_politeness(spark):
@@ -92,16 +98,16 @@ def test_quarantine_only_host_deferred(spark):
         _pol(spark, {"a": 5}),
         spark.createDataFrame([("b", 3)], "host string, quarantined_until int"),
     )
-    sel, deferred = select_fetch_set(fr, pol, epoch=1)
+    sel = select_fetch_set(fr, pol, epoch=1)
     assert [r["host"] for r in sel.collect()] == ["a"]
-    assert [r["host"] for r in deferred.collect()] == ["b"]
+    assert [r["host"] for r in _deferred(fr, sel).collect()] == ["b"]
 
 
 def test_selection_deterministic_across_runs(spark):
     rows = [(f"https://a/{i}", i * 977, "a", "detail", 0, 0, 0) for i in range(50)]
     fr = _frontier(spark, rows).repartition(7)
-    sel1, _ = select_fetch_set(fr, _pol(spark, {"a": 10}), epoch=0)
-    sel2, _ = select_fetch_set(fr.repartition(3), _pol(spark, {"a": 10}), epoch=0)
+    sel1 = select_fetch_set(fr, _pol(spark, {"a": 10}), epoch=0)
+    sel2 = select_fetch_set(fr.repartition(3), _pol(spark, {"a": 10}), epoch=0)
     a = sorted(r["url"] for r in sel1.collect())
     b = sorted(r["url"] for r in sel2.collect())
     assert a == b
@@ -117,13 +123,13 @@ def test_winner_rejoin_shuffle_fallback_same_result(spark):
     ]
     fr = _frontier(spark, rows)
     pol = _pol(spark, {f"h{i}": 3 for i in range(40)})
-    sel_b, def_b = select_fetch_set(fr, pol, epoch=0)  # broadcast path
-    sel_s, def_s = select_fetch_set(fr, pol, epoch=0, winner_broadcast_max_rows=0)
+    sel_b = select_fetch_set(fr, pol, epoch=0)  # broadcast path
+    sel_s = select_fetch_set(fr, pol, epoch=0, winner_broadcast_max_rows=0)
     got_b = sorted((r["url"], r["host_rank"]) for r in sel_b.collect())
     got_s = sorted((r["url"], r["host_rank"]) for r in sel_s.collect())
     assert got_b == got_s and len(got_b) == 40 * 3
-    assert sorted(r["url"] for r in def_b.collect()) == sorted(
-        r["url"] for r in def_s.collect()
+    assert sorted(r["url"] for r in _deferred(fr, sel_b).collect()) == sorted(
+        r["url"] for r in _deferred(fr, sel_s).collect()
     )
     # plan check: forcing the fallback removes the winner-set broadcast
     plan_b = sel_b._jdf.queryExecution().executedPlan().toString()
@@ -173,8 +179,8 @@ def test_winner_cache_is_caller_scoped(spark):
     fr_b = _frontier(spark, rows[:20])
     pol = _pol(spark, {"a": 5})
     cache_a, cache_b = {}, {}
-    sel_a, _ = select_fetch_set(fr_a, pol, epoch=0, cache=cache_a)
-    sel_b, _ = select_fetch_set(fr_b, pol, epoch=0, cache=cache_b)
+    sel_a = select_fetch_set(fr_a, pol, epoch=0, cache=cache_a)
+    sel_b = select_fetch_set(fr_b, pol, epoch=0, cache=cache_b)
     # B's selection must NOT have evicted A's persisted winner set
     assert cache_a["winners"].storageLevel.useMemory
     assert cache_b["winners"].storageLevel.useMemory
