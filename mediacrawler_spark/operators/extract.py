@@ -158,6 +158,27 @@ def extract_span_rows(
     return successes.select(cached_exprs(_span_exprs, comments_per_page, max_comments_per_note))
 
 
+def _assemble_exprs() -> tuple:
+    """The aggregate and the offset ``transform`` of
+    :func:`assemble_documents`, built once per session
+    (functions/exprcache.py)."""
+    packed = F.struct(
+        F.col("s_sec"), F.col("s_page"), F.col("s_phase"),
+        F.col("s_parent"), F.col("s_subpage"), F.col("s_idx"),
+        F.col("kind"), F.col("text"), F.col("media_ref"),
+    )
+    spans = F.transform(
+        F.col("arr"),
+        lambda x, i: F.struct(
+            x["kind"].alias("kind"),
+            x["text"].alias("text"),
+            x["media_ref"].alias("media_ref"),
+            i.cast("int").alias("offset"),
+        ),
+    ).alias("spans")
+    return F.sort_array(F.collect_list(packed)).alias("arr"), spans
+
+
 def assemble_documents(span_rows: DataFrame) -> DataFrame:
     """Span rows (any number of epochs) → the ``documents`` table.
 
@@ -165,24 +186,7 @@ def assemble_documents(span_rows: DataFrame) -> DataFrame:
     not a window. Offsets are re-densified so robots-denied or truncated
     segments never leave gaps.
     """
-    packed = F.struct(
-        F.col("s_sec"), F.col("s_page"), F.col("s_phase"),
-        F.col("s_parent"), F.col("s_subpage"), F.col("s_idx"),
-        F.col("kind"), F.col("text"), F.col("media_ref"),
-    )
-    return (
-        span_rows.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(packed)).alias("arr"))
-        .select(
-            "doc_id",
-            F.transform(
-                F.col("arr"),
-                lambda x, i: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    i.cast("int").alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    from mediacrawler_spark.functions.exprcache import cached_exprs
+
+    arr, spans = cached_exprs(_assemble_exprs)
+    return span_rows.groupBy("doc_id").agg(arr).select("doc_id", spans)

@@ -108,8 +108,9 @@ def classify_outcomes(fetched: DataFrame, epoch: int) -> dict[str, DataFrame]:
     retries = (
         withep.filter(d["retry_f"]).select(*d["retries_sel"]).select(*FRONTIER_COLS)
     )
-    # distinct over (host, constant) ≡ distinct over host
-    quarantined_hosts = withep.filter(d["blocking_f"]).select(*d["quar_sel"]).distinct()
+    # one row per blocking fetch, not per host: the quarantine merge's
+    # groupBy(host) dedups them
+    quarantined_hosts = withep.filter(d["blocking_f"]).select(*d["quar_sel"])
     return {
         "successes": successes,
         "retries": retries,
@@ -154,7 +155,8 @@ def _successor_exprs(
     comments_per_page: int, max_comments_per_note: int, max_pages_per_chain: int
 ) -> tuple:
     """The generator column and the finishing select list of
-    :func:`emit_successors`, built once per session
+    :func:`emit_successors`, and the aggregate of
+    :func:`count_successors`, built once per session
     (functions/exprcache.py). Every tree here is epoch-independent —
     re-building them per epoch was most of the successor stage's py4j
     round-trips (round-5 profile).
@@ -278,7 +280,8 @@ def _successor_exprs(
         host_of(F.col("url")).alias("host"),
         *[F.col(c) for c in FRONTIER_COLS if c not in ("url", "url_hash", "host")],
     ]
-    return F.inline(rows), finish
+    count = F.coalesce(F.sum(F.size(rows)), F.lit(0)).cast("long").alias("emitted_count")
+    return F.inline(rows), finish, count
 
 
 def emit_successors(
@@ -308,7 +311,7 @@ def emit_successors(
     """
     from mediacrawler_spark.functions.exprcache import cached_exprs
 
-    inline, finish = cached_exprs(
+    inline, finish, _ = cached_exprs(
         _successor_exprs, comments_per_page, max_comments_per_note, max_pages_per_chain
     )
     return (
@@ -316,3 +319,22 @@ def emit_successors(
         .select(inline)
         .select(*finish)
     )
+
+
+def count_successors(
+    successes: DataFrame,
+    epoch: int,
+    comments_per_page: int = 10,
+    max_comments_per_note: int = 500,
+    max_pages_per_chain: int = 1000,
+) -> DataFrame:
+    """One row, ``emitted_count``: how many rows :func:`emit_successors`
+    yields for the same arguments — Σ ``size`` of the per-row successor
+    array ``inline`` expands. A job of its own, so a reader of the count
+    need not wait for the successors' write."""
+    from mediacrawler_spark.functions.exprcache import cached_exprs
+
+    *_, count = cached_exprs(
+        _successor_exprs, comments_per_page, max_comments_per_note, max_pages_per_chain
+    )
+    return successes.withColumn("_nxt", F.lit(epoch + 1).cast("int")).agg(count)

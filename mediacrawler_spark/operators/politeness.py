@@ -39,6 +39,31 @@ from mediacrawler_spark.functions.urls import url_path
 ORDER_COLS = ("priority", "seq", "url_hash")
 
 
+def _robots_exprs(epoch_ts: int) -> dict:
+    """Static Column trees of :func:`apply_robots`, built once per session
+    per ``epoch_ts`` (functions/exprcache.py) — the epoch loop gates every
+    batch with the same rules."""
+    path = url_path(F.col("url"))
+    first_match = F.try_element_at(
+        F.filter(F.col("_rules"), lambda r: F.startswith(path, r["prefix"])),
+        F.lit(1),
+    )
+    return {
+        "live_f": F.col("expires_at") > F.lit(epoch_ts),
+        "rules_agg": F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.length("path_prefix").alias("len"),
+                    F.col("path_prefix").alias("prefix"),
+                    F.col("allow").alias("allow"),
+                )
+            ),
+            asc=False,  # longest prefix first → first match wins
+        ).alias("_rules"),
+        "allow_f": F.coalesce(first_match["allow"], F.lit(True)),
+    }
+
+
 def apply_robots(frontier: DataFrame, robots: DataFrame, epoch_ts: int) -> DataFrame:
     """Drop rows a robots rule denies (SURVEY S8/J5).
 
@@ -53,27 +78,25 @@ def apply_robots(frontier: DataFrame, robots: DataFrame, epoch_ts: int) -> DataF
     one row out (an earlier window-based version could nondeterministically
     collapse duplicate candidates before dedup picked its winner).
     """
-    live = robots.filter(F.col("expires_at") > F.lit(epoch_ts))
-    rules_by_host = live.groupBy("host").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.length("path_prefix").alias("len"),
-                    F.col("path_prefix").alias("prefix"),
-                    F.col("allow").alias("allow"),
-                )
-            ),
-            asc=False,  # longest prefix first → first match wins
-        ).alias("_rules")
-    )
+    from mediacrawler_spark.functions.exprcache import cached_exprs
+
+    d = cached_exprs(_robots_exprs, epoch_ts)
+    rules_by_host = robots.filter(d["live_f"]).groupBy("host").agg(d["rules_agg"])
     joined = frontier.join(F.broadcast(rules_by_host), on="host", how="left")
-    path = url_path(F.col("url"))
-    first_match = F.try_element_at(
-        F.filter(F.col("_rules"), lambda r: F.startswith(path, r["prefix"])),
-        F.lit(1),
-    )
-    allow = F.coalesce(first_match["allow"], F.lit(True))
-    return joined.filter(allow).drop("_rules")
+    return joined.filter(d["allow_f"]).drop("_rules")
+
+
+def _quarantine_exprs() -> list:
+    """The select list of :func:`merge_quarantine`, built once per
+    session (functions/exprcache.py)."""
+    return [
+        F.col("host"),
+        F.col("p.budget_per_epoch").alias("budget_per_epoch"),
+        F.greatest(
+            F.coalesce(F.col("p.quarantined_until"), F.lit(0)),
+            F.coalesce(F.col("q.quarantined_until"), F.lit(0)),
+        ).alias("quarantined_until"),
+    ]
 
 
 def merge_quarantine(politeness: DataFrame, quarantine: DataFrame) -> DataFrame:
@@ -87,17 +110,12 @@ def merge_quarantine(politeness: DataFrame, quarantine: DataFrame) -> DataFrame:
     Quarantine-only hosts get a NULL ``budget_per_epoch`` so
     ``select_fetch_set`` falls through to ``default_budget``.
     """
+    from mediacrawler_spark.functions.exprcache import cached_exprs
+
     return (
         politeness.alias("p")
         .join(quarantine.alias("q"), on="host", how="full_outer")
-        .select(
-            F.col("host"),
-            F.col("p.budget_per_epoch").alias("budget_per_epoch"),
-            F.greatest(
-                F.coalesce(F.col("p.quarantined_until"), F.lit(0)),
-                F.coalesce(F.col("q.quarantined_until"), F.lit(0)),
-            ).alias("quarantined_until"),
-        )
+        .select(*cached_exprs(_quarantine_exprs))
     )
 
 
@@ -150,6 +168,7 @@ def select_fetch_set(
     salt_splits: int = 8,
     winner_broadcast_max_rows: int = 2_000_000,
     cache: dict | None = None,
+    frontier_rows: int | None = None,
 ) -> DataFrame:
     """The rows of the due frontier fetched this epoch.
 
@@ -160,9 +179,15 @@ def select_fetch_set(
     The winner set is ≈ (#active hosts × budget) rows. Small sets are
     broadcast back onto the frontier (no frontier shuffle); past
     ``winner_broadcast_max_rows`` (millions of hosts — VERDICT r01 item 5)
-    the rejoin falls back to a shuffle hash join on url_hash, with the
-    winner set persisted so the selection windows run once, not once per
-    consumer.
+    the rejoin falls back to a shuffle hash join on url_hash.
+
+    ``frontier_rows`` is an optional upper bound on ``frontier``'s rows
+    that the caller already knows (the engine's footer count). The winner
+    set is a subset of the frontier, so a bound within the broadcast
+    limit picks the broadcast rejoin with no job at all. Without a bound,
+    or past the limit, the winner set is persisted and counted, so the
+    selection windows run once, not once per consumer, and the strategy
+    comes from the TRUE winner count.
     """
     # The selection windows run on a NARROW projection — (url_hash, host,
     # priority, seq) is ~30 bytes/row vs ~150+ for a full frontier row, so
@@ -192,22 +217,24 @@ def select_fetch_set(
         .select(*d["winner_sel"])
     )
 
-    # rejoin: persist + count the winner set (budget-bounded by
-    # construction) so the window chain is evaluated exactly once, then
-    # pick the join strategy from the TRUE winner count. The CALLER's
-    # previous winner set is dropped here — by then its consumers have
-    # run. The cache slot is caller-scoped (ADVICE r02: a module-global
-    # slot let two interleaved engines unpersist each other's live set).
-    winner_keys = winner_keys.persist()
+    # The CALLER's previous winner set is dropped here — by then its
+    # consumers have run. The cache slot is caller-scoped (ADVICE r02: a
+    # module-global slot let two interleaved engines unpersist each
+    # other's live set).
+    bounded = frontier_rows is not None and frontier_rows <= winner_broadcast_max_rows
+    if not bounded:
+        winner_keys = winner_keys.persist()
     slot = _DEFAULT_WINNER_CACHE if cache is None else cache
-    prev = slot.get("winners")
+    prev = slot.pop("winners", None)
     if prev is not None:
         prev.unpersist()
+    if bounded:
+        # the bound caps the winner set: broadcast it uncounted; the
+        # exchange evaluates the windows once, and the big frontier never
+        # reshuffles (url_hash is unique per frontier row by construction)
+        return due.join(F.broadcast(winner_keys), d["rejoin_cond"], "inner").drop("_w_hash")
     slot["winners"] = winner_keys
-    n_winners = winner_keys.count()
-    if n_winners <= winner_broadcast_max_rows:
-        # broadcast path: the big frontier never reshuffles (url_hash is
-        # unique per frontier row by construction)
+    if winner_keys.count() <= winner_broadcast_max_rows:
         wk = F.broadcast(winner_keys)
     else:
         # shuffle path: millions of hosts would exceed broadcast limits

@@ -11,12 +11,21 @@ One epoch = one Spark job DAG:
     everything ──► ONE snapshot commit (frontier logs, seen, spans,
     fetch_log, lineage) — resume re-reads the last commit (north_rule).
 
-The writes that depend only on already-staged tables run overlapped on a
-pool of at most four threads, joined before the commit: the filter update
-and the ``seen`` append beside selection and fetch, then the ``fetched``
-derivatives (spans, retries, quarantine, fetch_log, successors →
-lineage). Each alone is a few small jobs; issued one after another they
-left most cores idle between one job's driver-side planning and the next.
+The epoch's serial chain is
+
+    admitted write → fetched write → one level of overlapped writes → commit
+
+Everything else runs beside it on a pool of at most eight threads, joined
+before the commit: the filter update and the ``seen`` append beside
+selection and fetch, then the six ``fetched`` derivatives (candidates,
+lineage, spans, retries, quarantine, fetch_log), which all start at once.
+Each alone is a few small jobs; issued one after another they left most
+cores idle between one job's driver-side planning and the next. No count
+job sits on the chain: the admission batch size is the admitted footer
+count when nothing is seen yet (else its one count runs on the pool beside
+the admitted write), the winner rejoin takes the frontier's footer bound,
+and lineage counts the successors itself instead of waiting for the
+candidates write. The last epoch of a ``run`` re-reads no state.
 
 The reference's equivalent is its nested asyncio loops (SURVEY §3.1); the
 epoch loop linearizes them: each platform page-loop iteration becomes a
@@ -50,7 +59,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediacrawler_spark.operators.dedup import (
@@ -72,9 +81,11 @@ from mediacrawler_spark.operators.extract import (
 from mediacrawler_spark.operators.frontier import (
     FRONTIER_COLS,
     classify_outcomes,
+    count_successors,
     emit_successors,
     seeds_to_candidates,
 )
+from mediacrawler_spark.functions.exprcache import cached_exprs
 from mediacrawler_spark.functions.urls import host_of, with_canonical_url
 from mediacrawler_spark.operators.politeness import (
     apply_robots,
@@ -130,8 +141,51 @@ class EngineConfig:
 # the frontier's append logs; fetched rows are the equality deletes
 _FRONTIER_LOGS = ("admitted", "retries", "fetched")
 _ROW_KEY = ["url_hash", "attempt"]
-# threads overlapping one epoch's independent snapshot writes
-_WRITE_THREADS = 4
+# threads overlapping one epoch's independent snapshot writes: the six
+# writes derived from ``fetched`` all start together even while the filter
+# update and the ``seen`` append still run (6 + 2)
+_WRITE_THREADS = 8
+
+
+def _epoch_exprs(epoch_ts: int) -> dict:
+    """Static Column trees of the loop's own projections, built once per
+    session (functions/exprcache.py). The epoch enters through the
+    constant ``_ep`` int column (and the dedup count through ``_dedup``)
+    attached where needed; Catalyst folds them to the literals a
+    per-epoch tree would carry."""
+    ep = F.col("_ep")
+    null = F.lit(None).cast("long")
+    entered = {"epoch": ep, "not_before_epoch": F.greatest(F.col("not_before_epoch"), ep)}
+    return {
+        "admitted_sel": [entered.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS],
+        "fetch_log_sel": [
+            ep.alias("epoch"),
+            F.col("host"),
+            F.col("host_rank").cast("int"),
+            F.col("url"),
+            F.col("kind"),
+            F.col("status").cast("int"),
+        ],
+        # lineage: fetch_count per fetch partition; the epoch-level counts
+        # on one partition_id = -1 summary row
+        "part_keys": [
+            ep.alias("frontier_epoch"),
+            F.pmod(F.xxhash64("salted_host"), F.lit(1024)).cast("int").alias("partition_id"),
+        ],
+        "part_aggs": [
+            F.count("*").alias("fetch_count"),
+            null.alias("dedup_count"),
+            null.alias("emitted_count"),
+        ],
+        "summary_sel": [
+            ep.alias("frontier_epoch"),
+            F.lit(-1).cast("int").alias("partition_id"),
+            null.alias("fetch_count"),
+            F.col("_dedup").alias("dedup_count"),
+            F.col("emitted_count"),
+        ],
+        "committed_at": F.col("frontier_epoch").cast("long") + F.lit(epoch_ts),
+    }
 
 
 @dataclass
@@ -488,22 +542,12 @@ class CrawlEngine:
         )
         self.catalog.stage(merged, "quarantine")
 
-    def _stage_fetch_log(self, fetched: DataFrame, epoch: int) -> None:
-        log = fetched.select(
-            F.lit(epoch).alias("epoch"),
-            F.col("host"),
-            F.col("host_rank").cast("int"),
-            F.col("url"),
-            F.col("kind"),
-            F.col("status").cast("int"),
-        )
+    def _stage_fetch_log(self, fetched: DataFrame, ep: Column, epoch: int) -> None:
+        d = cached_exprs(_epoch_exprs, self.cfg.epoch_ts)
+        log = fetched.withColumn("_ep", ep).select(*d["fetch_log_sel"])
         self.catalog.stage_append(log, "fetch_log", epoch)
 
-    def _stage_successors(
-        self, successes: DataFrame, fetched: DataFrame, epoch: int, n_dedup: int
-    ) -> int:
-        """Stage the next epoch's candidates, then the epoch's lineage
-        (which records their count); returns that count."""
+    def _stage_candidates(self, successes: DataFrame, epoch: int) -> None:
         cfg = self.cfg
         successors = emit_successors(
             successes,
@@ -513,45 +557,50 @@ class CrawlEngine:
             cfg.max_pages_per_chain,
         )
         self.catalog.stage(successors, "candidates")
-        n_emitted = self.catalog.staged_rows("candidates")
-        # Lineage (north_rule: frontier epoch, partition id, fetch counts):
-        # fetch_count is attributed PER PARTITION; dedup and emitted counts
-        # are epoch-level facts (they have no per-fetch-partition meaning —
-        # dropped candidates never reach a salted host) and live on ONE
-        # summary row with partition_id = -1, so per-partition sums stay
-        # meaningful (VERDICT r03 #7; fsck checks the shape).
-        per_part = fetched.groupBy(
-            F.lit(epoch).alias("frontier_epoch"),
-            F.pmod(F.xxhash64("salted_host"), F.lit(1024)).cast("int").alias("partition_id"),
-        ).agg(
-            F.count("*").alias("fetch_count"),
-            F.lit(None).cast("long").alias("dedup_count"),
-            F.lit(None).cast("long").alias("emitted_count"),
+
+    def _stage_lineage(
+        self, successes: DataFrame, fetched: DataFrame, ep: Column, epoch: int, n_dedup: int
+    ) -> None:
+        """Lineage (north_rule: frontier epoch, partition id, fetch
+        counts): fetch_count is attributed PER PARTITION; dedup and
+        emitted counts are epoch-level facts (they have no per-fetch-
+        partition meaning — dropped candidates never reach a salted host)
+        and live on ONE summary row with partition_id = -1, so
+        per-partition sums stay meaningful (VERDICT r03 #7; fsck checks
+        the shape). The emitted count is its own job over ``successes``
+        (:func:`count_successors`), so this write never waits for the
+        ``candidates`` write."""
+        cfg = self.cfg
+        d = cached_exprs(_epoch_exprs, cfg.epoch_ts)
+        per_part = fetched.withColumn("_ep", ep).groupBy(*d["part_keys"]).agg(*d["part_aggs"])
+        summary = (
+            count_successors(
+                successes,
+                epoch,
+                cfg.comments_per_page,
+                cfg.max_comments_per_note,
+                cfg.max_pages_per_chain,
+            )
+            .withColumns({"_ep": ep, "_dedup": F.lit(n_dedup).cast("long")})
+            .select(*d["summary_sel"])
         )
-        epoch_row = self.spark.range(1).select(
-            F.lit(epoch).cast("int").alias("frontier_epoch"),
-            F.lit(-1).cast("int").alias("partition_id"),
-            F.lit(None).cast("long").alias("fetch_count"),
-            F.lit(n_dedup).cast("long").alias("dedup_count"),
-            F.lit(n_emitted).cast("long").alias("emitted_count"),
-        )
-        lineage = per_part.unionByName(epoch_row).withColumn(
-            "committed_at", F.lit(cfg.epoch_ts + epoch).cast("long")
-        )
+        lineage = per_part.unionByName(summary).withColumn("committed_at", d["committed_at"])
         self.catalog.stage_append(lineage, "lineage", epoch)
-        return n_emitted
 
     # -- the loop -------------------------------------------------------------
     def run(self, seeds: DataFrame | None, max_epochs: int | None = None) -> RunResult:
         """Run (or resume) the crawl until the frontier drains.
 
         ``seeds`` is only consumed on a fresh catalog; on resume the
-        candidate/frontier state comes from the last commit.
+        candidate/frontier state comes from the last commit. Nothing the
+        run persisted stays cached after it returns or raises.
         """
         cfg = self.cfg
+        d = cached_exprs(_epoch_exprs, cfg.epoch_ts)
         result = RunResult()
         self._migrate_legacy_state()
         start_epoch = self.catalog.committed_epoch() + 1
+        end_epoch = start_epoch + (max_epochs or cfg.max_epochs)
         if start_epoch == 0:
             if seeds is None:
                 raise ValueError("fresh run needs seeds")
@@ -567,12 +616,14 @@ class CrawlEngine:
 
         pool = ThreadPoolExecutor(max_workers=_WRITE_THREADS)
         submit = partial(_submit, pool, self.spark)
+        probed = None  # the persisted admission batch of the probe path
         try:
-            for epoch in range(start_epoch, start_epoch + (max_epochs or cfg.max_epochs)):
+            for epoch in range(start_epoch, end_epoch):
                 # Every stage below is computed ONCE and materialized (staged
                 # to the snapshot), then downstream reads the materialized
                 # result — no chain is re-executed for counts or secondary
                 # consumers.
+                ep = F.lit(epoch).cast("int")
 
                 # 1. admission: canonicalize → robots → intra-batch dedup →
                 #    bloom+anti-join (successor URLs from live pages may be
@@ -586,43 +637,49 @@ class CrawlEngine:
                         .withColumn("host", self._host_col)
                     )
                 gated = apply_robots(candidates, self.robots, cfg.epoch_ts)
-                # persist: the admission chain (canonicalize UDF → robots →
-                # dedup shuffle) is consumed by the count, the bloom probe,
-                # and the anti-join — without it the chain would execute 3×
-                unique_batch = dedup_within_batch(gated).persist()
-                n_batch = unique_batch.count()
+                unique_batch = dedup_within_batch(gated)
+                n_batch_f = None
                 # the filter (if any) covers all of seen; it is rebuilt or
                 # advanced after admission (_update_bloom)
                 if epoch == 0 or (bloom is not None and bloom["n_inserted"] == 0):
                     # empty seen set: everything is new — skip the filter
-                    # collect/probe/anti-join jobs outright
+                    # collect/probe/anti-join jobs outright. The batch is
+                    # evaluated once, by the admitted write, and its size is
+                    # the admitted footer count.
                     deduped = unique_batch
-                elif bloom is None:
-                    # no filter over a non-empty seen (a snapshot predating
-                    # the filter, or a filter-kind switch): exact anti-join
-                    deduped = unique_batch.join(
-                        seen.select("url_hash"), on="url_hash", how="left_anti"
-                    )
                 else:
-                    deduped = dedup_against_seen_bloom(
-                        unique_batch,
-                        seen,
-                        bloom["df"],
-                        bloom["params"],
-                        cfg.bloom_broadcast_max_bytes,
-                    )
-                admitted = (
-                    deduped.withColumn("epoch", F.lit(epoch))
-                    .withColumn(
-                        "not_before_epoch", F.greatest("not_before_epoch", F.lit(epoch))
-                    )
-                    .select(*FRONTIER_COLS)
-                )
+                    # persist: the admission chain (canonicalize UDF → robots
+                    # → dedup shuffle) feeds the probe and the anti-join, and
+                    # its count (the filter's headroom check) runs beside the
+                    # admitted write
+                    probed = unique_batch = unique_batch.persist()
+                    n_batch_f = submit(unique_batch.count)
+                    if bloom is None:
+                        # no filter over a non-empty seen (a snapshot
+                        # predating the filter, or a filter-kind switch):
+                        # exact anti-join
+                        deduped = unique_batch.join(
+                            seen.select("url_hash"), on="url_hash", how="left_anti"
+                        )
+                    else:
+                        deduped = dedup_against_seen_bloom(
+                            unique_batch,
+                            seen,
+                            bloom["df"],
+                            bloom["params"],
+                            cfg.bloom_broadcast_max_bytes,
+                        )
+                admitted = deduped.withColumn("_ep", ep).select(*d["admitted_sel"])
                 self.catalog.stage_append(admitted, "admitted", epoch)
-                unique_batch.unpersist()
                 admitted = self.catalog.read_staged("admitted", epoch)
                 # footer-metadata count — zero Spark jobs (VERDICT r02 item 9)
                 n_admitted = self.catalog.staged_append_rows("admitted", epoch)
+                if n_batch_f is None:
+                    n_batch = n_admitted
+                else:
+                    n_batch = n_batch_f.result()
+                    probed.unpersist()
+                    probed = None
                 n_dedup = n_batch - n_admitted
                 # the filter update and the seen delta (derived from the
                 # already-materialized parquet) need only admitted: they
@@ -642,11 +699,14 @@ class CrawlEngine:
 
                 # 2. selection: politeness budgets + dynamic quarantine
                 # (full-outer merge — quarantine must survive for hosts that
-                # have no politeness row; see merge_quarantine docstring)
+                # have no politeness row; see merge_quarantine docstring).
+                # The footer count bounds the winner set, so the rejoin's
+                # strategy needs no count job.
                 pol = merge_quarantine(self.politeness, quarantine)
                 selected = select_fetch_set(
                     frontier, pol, epoch, cfg.default_budget, cfg.salt_splits,
                     cache=self._winner_cache,
+                    frontier_rows=self._frontier_rows() + n_admitted,
                 )
 
                 # 3. fetch — materialized once; everything downstream reads it
@@ -656,24 +716,24 @@ class CrawlEngine:
                 n_fetched = self.catalog.staged_append_rows("fetched", epoch)
                 out = classify_outcomes(fetched, epoch)
 
-                # 4-5. everything derived from fetched, overlapped: successors
-                # (→ lineage, which needs their count), span rows, the
-                # frontier's retries log (the frontier only appends: bytes
-                # written scale with the delta, not |frontier|), quarantine,
-                # fetch_log
-                emitted_f = submit(
-                    self._stage_successors, out["successes"], fetched, epoch, n_dedup
-                )
+                # 4-5. everything derived from fetched, in one level of
+                # overlapped writes: successors, lineage (which counts the
+                # successors itself), span rows, the frontier's retries log
+                # (the frontier only appends: bytes written scale with the
+                # delta, not |frontier|), quarantine, fetch_log
                 writes += [
-                    emitted_f,
+                    submit(self._stage_candidates, out["successes"], epoch),
+                    submit(
+                        self._stage_lineage, out["successes"], fetched, ep, epoch, n_dedup
+                    ),
                     submit(self._stage_spans, out["successes"], epoch),
                     submit(self.catalog.stage_append, out["retries"], "retries", epoch),
                     submit(self._stage_quarantine, quarantine, out["quarantined_hosts"], epoch),
-                    submit(self._stage_fetch_log, fetched, epoch),
+                    submit(self._stage_fetch_log, fetched, ep, epoch),
                 ]
                 _join(writes)
                 bloom = bloom_f.result()
-                n_emitted = emitted_f.result()
+                n_emitted = self.catalog.staged_rows("candidates")
 
                 # 6. snapshot commit (atomic; also truncates plan lineage)
                 fold = {**fold, "log": fold["log"] + [epoch]}
@@ -695,15 +755,6 @@ class CrawlEngine:
                     self.catalog.expire_versions(keep_last=cfg.expire_keep_last)
                     self.catalog.roll_log(keep=2, max_lines=cfg.commit_log_max_lines)
 
-                # re-read state: bounds DAG depth across epochs (quarantine
-                # included — its lazy union chain would otherwise reference
-                # every past epoch's fetched dir, growing the plan per epoch
-                # and dangling once maintenance expires those dirs)
-                frontier = self._frontier()
-                seen = self._seen()
-                candidates = self._candidates()
-                quarantine = self._quarantine()
-
                 result.epochs.append(
                     EpochStats(epoch, n_admitted, n_dedup, n_fetched, n_emitted)
                 )
@@ -712,8 +763,22 @@ class CrawlEngine:
                     # (footer-metadata count — no job)
                     if self._frontier_rows() == 0:
                         break
+                if epoch + 1 < end_epoch:
+                    # re-read state for the next epoch: bounds DAG depth
+                    # across epochs (quarantine included — its lazy union
+                    # chain would otherwise reference every past epoch's
+                    # fetched dir, growing the plan per epoch and dangling
+                    # once maintenance expires those dirs)
+                    frontier = self._frontier()
+                    seen = self._seen()
+                    candidates = self._candidates()
+                    quarantine = self._quarantine()
         finally:
             pool.shutdown(wait=True)
+            winners = self._winner_cache.pop("winners", None)
+            for df in (probed, winners):
+                if df is not None:
+                    df.unpersist()
         return result
 
 

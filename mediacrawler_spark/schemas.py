@@ -164,6 +164,17 @@ SEEDS_SCHEMA = T.StructType(
 )
 
 
+def _empty_exprs(schema: T.StructType | str) -> tuple:
+    """The typed-null select list and the always-false predicate of
+    :func:`empty_frame`, built once per session per schema
+    (functions/exprcache.py): the engine asks for the same few empty
+    frames every epoch, and a frontier-wide select list of casts was
+    hundreds of py4j round-trips."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields], F.lit(False)
+
+
 def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     """Zero-row frame of ``schema`` (a StructType or DDL string) that the
     optimizer can see through: typed nulls over ``spark.range(1)`` behind
@@ -171,8 +182,7 @@ def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     ``LocalRelation``. ``createDataFrame([], schema)`` is an RDD-backed
     ``LogicalRDD`` instead: nothing prunes it, and every action over it
     (a count, a union it feeds) schedules jobs."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    return spark.range(1).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-    ).where(F.lit(False))
+    from mediacrawler_spark.functions.exprcache import cached_exprs
+
+    cols, false = cached_exprs(_empty_exprs, schema)
+    return spark.range(1).select(*cols).where(false)

@@ -30,8 +30,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from contextlib import contextmanager
 
 import pytest
+from py4j.protocol import CALL_COMMAND_NAME, MEMORY_COMMAND_NAME, REFLECTION_COMMAND_NAME
 
 from mediacrawler_spark.fixtures import UniverseParams, build_universe
 from mediacrawler_spark.schemas import (
@@ -208,3 +211,53 @@ def mid_crawl_ref(spark, udfs, crawl_cfg, partial_crawl, snapshot_state, tmp_pat
     st = snapshot_state(eng)
     assert st["committed_epoch"] == 3
     return st
+
+
+# ------------------------------------------------ py4j round-trip counter ----
+class Py4jCounter:
+    """Commands the Python side sent to the JVM while :meth:`counting`
+    was open, by kind: ``calls`` (method calls), ``reflections`` (class
+    and member lookups) and ``total`` (every command but the proxy
+    deletes, whose timing follows Python's garbage collector)."""
+
+    def __init__(self):
+        self.calls = self.reflections = self.total = 0
+        self._on = False
+        self._lock = threading.Lock()  # pool threads send commands too
+
+    def _seen(self, command: str) -> None:
+        if not self._on or command.startswith(MEMORY_COMMAND_NAME):
+            return
+        with self._lock:
+            self.total += 1
+            if command.startswith(CALL_COMMAND_NAME):
+                self.calls += 1
+            elif command.startswith(REFLECTION_COMMAND_NAME):
+                self.reflections += 1
+
+    @contextmanager
+    def counting(self):
+        self.calls = self.reflections = self.total = 0
+        self._on = True
+        try:
+            yield self
+        finally:
+            self._on = False
+
+
+@pytest.fixture()
+def py4j_commands(monkeypatch):
+    """A :class:`Py4jCounter` fed by every ``ClientServerConnection``
+    (one per Python thread in PySpark's pinned-thread mode, so pool
+    threads count too)."""
+    from py4j.clientserver import ClientServerConnection
+
+    counter = Py4jCounter()
+    send = ClientServerConnection.send_command
+
+    def counted(conn, command, *args, **kwargs):
+        counter._seen(command)
+        return send(conn, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    return counter

@@ -215,6 +215,7 @@ def crawl_wide(spark, uni, root, seen_filter, n_epochs=_WIDE_EPOCHS, copies=()):
             "base_written": sum(new_dirs.values()),
             "live": _frontier_bytes(cat, fold["log"]),
             "footer_rows": eng._frontier_rows(),
+            "candidates_rows": cat.rows("candidates"),
             "merged_rows": eng._frontier().count(),
         }
         if not rec["folded"]:
@@ -328,6 +329,37 @@ def test_epoch_writes_are_delta_not_full_state(wide_crawl, wide_universe, seen_f
     assert got["seen"] == want.seen
     assert got["order"] == want.fetch_order
     assert got["frontier"], "the frontier must outlive the crawl window"
+
+
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_lineage_counts_match_committed_state(wide_crawl, seen_filter):
+    """The lineage write counts the epoch's successors in its own job,
+    beside the ``candidates`` write: at every epoch, the fold included,
+    the summary row's ``emitted_count`` equals the rows of the committed
+    ``candidates`` version, and the per-partition ``fetch_count``s sum
+    to the epoch's fetches. ``fsck`` stays clean."""
+    crawl = wide_crawl(seen_filter)
+    cat = crawl["eng"].catalog
+    lin = cat.read("lineage")
+    emitted = {
+        r["frontier_epoch"]: r["emitted_count"]
+        for r in lin.filter("partition_id = -1").collect()
+    }
+    fetched = {
+        r["frontier_epoch"]: r["n"]
+        for r in lin.filter("partition_id >= 0")
+        .groupBy("frontier_epoch")
+        .agg(F.sum("fetch_count").alias("n"))
+        .collect()
+    }
+    recs = crawl["records"]
+    assert len(recs) >= 8
+    for r in recs:
+        st = r["stats"]
+        assert emitted[st.epoch] == r["candidates_rows"] == st.emitted, st
+        assert fetched.get(st.epoch, 0) == st.fetched, st
+    assert any(r["candidates_rows"] > 0 for r in recs)
+    assert cat.fsck() == []
 
 
 def test_fold_plan_has_no_repartition(wide_crawl):

@@ -137,6 +137,39 @@ def test_winner_rejoin_shuffle_fallback_same_result(spark):
     assert plan_b.count("BroadcastExchange") > plan_s.count("BroadcastExchange")
 
 
+def test_winner_rejoin_with_known_bound_broadcasts_uncached(spark):
+    """A frontier-row bound within the broadcast limit picks the broadcast
+    rejoin with no winner-set persist or count: the plan joins through a
+    BroadcastHashJoin and caches nothing, and the rows equal the counted
+    path's. A bound past the limit falls back to the counted path."""
+    rows = [
+        (f"https://h{i % 40}/{i}", i * 977 + 13, f"h{i % 40}", "detail", 0, i, 0)
+        for i in range(400)
+    ]
+    fr = _frontier(spark, rows)
+    pol = _pol(spark, {f"h{i}": 3 for i in range(40)})
+    bound_cache, counted_cache = {}, {}
+    sel_k = select_fetch_set(fr, pol, epoch=0, cache=bound_cache, frontier_rows=len(rows))
+    got_k = sorted((r["url"], r["host_rank"]) for r in sel_k.collect())
+    # planned before the counted path caches the same winner plan, which
+    # Spark's CacheManager would substitute into any plan built later
+    plan = sel_k._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "InMemoryRelation" not in plan, plan
+    assert bound_cache == {}
+    sel_c = select_fetch_set(fr, pol, epoch=0, cache=counted_cache)
+    got_c = sorted((r["url"], r["host_rank"]) for r in sel_c.collect())
+    assert got_k == got_c and len(got_k) == 40 * 3
+    assert counted_cache["winners"].storageLevel.useMemory
+    over = select_fetch_set(
+        fr, pol, epoch=0, cache=bound_cache, frontier_rows=len(rows),
+        winner_broadcast_max_rows=len(rows) - 1,
+    )
+    assert bound_cache["winners"].storageLevel.useMemory
+    assert sorted((r["url"], r["host_rank"]) for r in over.collect()) == got_c
+    for c in (bound_cache, counted_cache):
+        c["winners"].unpersist()
+
+
 def test_robots_longest_prefix_wins(spark):
     fr = _frontier(
         spark,
